@@ -242,9 +242,7 @@ def bench_ivfpq_batch1k_df(spark, sf_dir):
     as a TABLE through the probe-assign -> (cell, salt) cogroup -> rerank
     pipeline — residual LUTs computed inside the tasks from broadcast
     codebooks, zero query-side collects. ONE pass over the probed cells'
-    code rows for all 1000 queries (the amortization the list path cannot
-    reach: its per-query LUTs ship in the task closure, capping batch
-    size)."""
+    code rows for all 1000 queries."""
     from neighborly_spark.operators.ivfpq import ivfpq_knn_join
 
     bench_ivfpq_150k(spark, sf_dir)  # model + codes ready (untimed build)

@@ -47,8 +47,10 @@ CODE_COL = "pq_code"
 _LUT_QUERY_CHUNK = 512
 
 #: code-row tile of the ADC accumulation loop (see _adc_dists): sized so
-#: the (tile, chunk) float64 accumulator (1 MB at 256 x 512) plus the m
-#: 1 MB transposed LUT blocks stay cache-resident per worker
+#: the (tile, chunk) float64 accumulator (1 MB at 256 x 512) stays
+#: cache-resident across the m subspace adds. The m transposed LUT blocks
+#: (k' x chunk doubles each, 1 MB at 256 x 512) total about m MB and are
+#: streamed, not cache-resident; only the accumulator's residency matters
 _ADC_ROW_TILE = 256
 
 
@@ -59,9 +61,9 @@ def _residual_luts(res2d, books, books_sq, m, sub_dim, kp):
     (n, m, k', sub_dim) intermediate (round 11: measured ~2.5x per chunk
     at m=8, k'=256, sub_dim=8). Entries are clamped at 0 (the expansion
     can round a true 0 to -1e-16, and downstream takes sqrt of LUT sums).
-    This is THE LUT definition for every numpy ADC tier — the list path,
-    the cogroup path, and the snapshot tier all call it, so their
-    distances stay bit-equal by construction (test-gated)."""
+    This is THE LUT definition for every numpy ADC tier — the cogroup
+    path and the snapshot tier both reach it through _score_sorted_codes,
+    so their distances stay bit-equal by construction (test-gated)."""
     import numpy as np
 
     r = res2d.reshape(len(res2d), m, sub_dim)
@@ -73,9 +75,6 @@ def _residual_luts(res2d, books, books_sq, m, sub_dim, kp):
 def _adc_dists(ld, idx_s, m):
     """(chunk, n) ADC distance sums: for each code row, gather its m LUT
     entries and accumulate SEQUENTIALLY over subspaces (s ascending).
-    The accumulation order is part of the cross-tier bit-equality
-    contract: the list path sums its per-row gathers in the same
-    s-ascending sequential order.
 
     Gather layout (round 11, second pass): the earlier
     ``ld[:, idx_s[:, s]]`` column gather strides m*k'*8 bytes (16 KB at
@@ -83,7 +82,8 @@ def _adc_dists(ld, idx_s, m):
     cache-hostile pattern that saturates DRAM with many concurrent
     python workers (measured 16-way: 6.3 s vs 1.8 s per 24-chunk group).
     Instead, transpose each subspace's k' x chunk LUT block into a
-    contiguous ~1 MB buffer (cache-resident) and gather whole ROWS of it.
+    contiguous ~1 MB buffer and gather whole ROWS of it (each gathered
+    row is one contiguous chunk-length run).
 
     Row tiling (round 12, third pass): accumulating the full (n, chunk)
     matrix in one sweep per subspace re-reads and re-writes the ~19 MB
@@ -93,15 +93,14 @@ def _adc_dists(ld, idx_s, m):
     Tiling the code rows keeps a (tile, chunk) accumulator cache-resident
     across all m subspace adds and writes each output element ONCE. Each
     element's addends and their s-ascending order are unchanged, so sums
-    stay bit-equal (microbench array_equal-verified and test-gated across
-    tiers)."""
+    stay bit-equal (microbench array_equal-verified and test-gated)."""
     import numpy as np
 
     kp = ld.shape[1] // m
     lt = ld.reshape(len(ld), m, kp).transpose(1, 2, 0)  # (m, k', chunk) views
     blocks = [np.ascontiguousarray(lt[s]) for s in range(m)]
     n = len(idx_s)
-    dist_t = np.empty((n, ld.shape[0]))
+    dist_t = np.empty((n, ld.shape[0]), dtype=ld.dtype)
     for b0 in range(0, n, _ADC_ROW_TILE):
         b1 = min(b0 + _ADC_ROW_TILE, n)
         acc = blocks[0][idx_s[b0:b1, 0]]  # (tile, chunk) contiguous rows
@@ -144,9 +143,9 @@ def _score_sorted_codes(
 ):
     """Score one cell's (id-sorted) code rows against a query block and
     return each query's top-``fetch`` (dist, id) rows as a pandas frame —
-    THE shared ADC kernel of the cogroup path (_ivfpq_knn_join_df) and
-    the worker-resident snapshot tier (ivfpq_knn_join_snapshot), factored
-    so the two are bit-equal by construction.
+    THE shared ADC kernel of the cogroup path (ivfpq_knn_join) and the
+    worker-resident snapshot tier (ivfpq_knn_join_snapshot), factored so
+    the two are bit-equal by construction.
 
     Task-local residual LUTs from the broadcast codebooks (round-6
     VERDICT 1: never driver-side), computed in bounded QUERY CHUNKS
@@ -155,9 +154,8 @@ def _score_sorted_codes(
     464 s unchunked — memory thrash, not compute). Round 11 rebuilt the
     per-chunk math on three measured wins with the SAME results contract:
     _residual_luts (einsum expansion, ~2.5x), _adc_dists (sequential 2D
-    gathers, no 3D intermediate), _topk_stable (partition select, ~4x) —
-    each shared with (or order-matched to) the list path, so the tiers
-    stay bit-equal (test-gated). ``ids_s``/``idx_s`` are the cell's ids
+    gathers, no 3D intermediate), _topk_stable (partition select, ~4x).
+    ``ids_s``/``idx_s`` are the cell's ids
     and flat-gather indexes PRE-SORTED by id (stable), so the stable
     top-fetch breaks distance ties in id order — exactly
     lexsort((ids, dist)) per query."""
@@ -597,208 +595,50 @@ def ivfpq_knn_join(
 ) -> DataFrame:
     """Batched IVFPQ search: top-k per query in ONE pass over the probed
     cells' code rows (the 100 TB serving shape, mirroring
-    hnsw_search_batch). ``queries`` is a [(query_id, vector), ...] list OR
-    a (query_id, query_embedding) DataFrame.
+    hnsw_search_batch). ``queries`` is a (query_id, query_embedding)
+    DataFrame or a [(query_id, vector), ...] list; a list becomes a JVM
+    LocalRelation (session.local_relation_queries) and takes the same
+    path, so both input shapes give identical results.
 
-    LIST path (bounded batches): the scan filters to the UNION of all
-    queries' probed cells (partition pruning on an ivf_write layout); an
-    Arrow kernel scores each row against every query that probes its cell
-    via per-(query, cell) residual LUTs — (n x m) gather-sums, no float
-    vectors touched — and emits only the per-partition top-`shortlist`
-    rows per query, so the shuffle is bounded at partitions x nq x
-    shortlist regardless of data size. Per-partition and global selection
-    both order by (dist, id), so the candidate set equals the
-    single-query path's exactly.
-
-    DATAFRAME path (round-6 VERDICT 1 — the canonical 100 TB shape, a
-    large query TABLE against the prebuilt index, zero query-side
-    collects): probe-cell assignment is a vectorized mapInPandas over the
-    query table (nprobe rows out per query, same stable-argsort cell
-    order as the list path); the code scan is semi-joined to the probed
-    cells (partition pruning); and a cogroup on (cell, salt) delivers
-    each task ONE cell's code rows plus the queries probing that cell —
-    the per-(query, cell) residual LUTs are computed INSIDE the task from
-    the broadcast codebooks, never on the driver. ``data_salt`` splits
-    each cell's query fan-in across `data_salt` buckets (round 11: the
-    QUERIES hash into one bucket each — the heavy embedding-carrying side
-    shuffles once — while the m-byte code rows, the byte-small side,
-    replicate across buckets; the snapshot tier's query_salt layout).
-    Raise it to shorten stragglers at large per-cell query fan-in; cell
-    CODE size is governed by nlist, the same sizing rule as the snapshot
-    tier. Results are salt-invariant and distances bit-equal to the list
-    path (same numpy reductions in the same order — test-gated).
+    Stages (round-6 VERDICT 1 — a large query TABLE against the prebuilt
+    index, zero query-side collects): probe-assign (mapInPandas, narrow;
+    nprobe rows out per query) -> prune codes to the probed cells
+    (broadcast semi join = partition pruning on an ivf_write layout) ->
+    cogroup on (cell, salt), each task scoring ONE cell's code rows
+    against the queries probing that cell with per-(query, cell) residual
+    LUTs computed INSIDE the task from the broadcast codebooks, never on
+    the driver -> bounded global merge -> optional exact rerank. Every
+    driver-side object is model-sized (codebooks), never query- or
+    data-sized. ``data_salt`` splits each cell's query fan-in across
+    `data_salt` buckets (round 11: the QUERIES hash into one bucket each —
+    the heavy embedding-carrying side shuffles once — while the m-byte
+    code rows, the byte-small side, replicate across buckets; the snapshot
+    tier's query_salt layout). Raise it to shorten stragglers at large
+    per-cell query fan-in; cell CODE size is governed by nlist, the same
+    sizing rule as the snapshot tier. Results are salt-invariant and
+    bit-equal to the snapshot tier (shared kernel _score_sorted_codes —
+    test-gated). Per-cell and global selection both order by (dist, id),
+    so the candidate set equals the single-query path's exactly.
 
     ``rerank=True`` (default, requires ``df``) reranks with exact float
     distances via an id join (nq x shortlist float rows).
     Returns (query_id, id, dist)."""
-    from collections.abc import Iterator
-
     import numpy as np
     import pandas as pd
 
-    if isinstance(queries, DataFrame):
-        return _ivfpq_knn_join_df(
-            encoded, model, queries, k, nprobe, df, rerank, shortlist,
-            id_col, vec_col, data_salt,
-        )
-
-    qids = [q[0] for q in queries]
-    qvecs = model.rotate(
-        np.asarray([list(q[1]) for q in queries], dtype=np.float64)
-    )
-    nq = len(queries)
-    m, sub_dim = model.pq.m, model.pq.sub_dim
-    nlist = model.ivf.nlist
-    coarse = np.asarray(model.ivf.centroids, dtype=np.float64)
-    books = np.stack([np.asarray(c, dtype=np.float64) for c in model.pq.centroids])
-
-    # per-query probed cells (stable argsort == (dist, cell) order of
-    # _probe_cells) and per-(query, probe) residual LUTs, built on the
-    # driver: nq x nprobe x m x k' doubles, shipped in the task closure
-    dcell = ((qvecs[:, None, :] - coarse[None, :, :]) ** 2).sum(-1)
-    order = np.argsort(dcell, axis=1, kind="stable")[:, :nprobe]  # (nq, nprobe)
-    res = qvecs[:, None, :] - coarse[order]  # (nq, nprobe, dim)
-    # the SHARED LUT definition (_residual_luts — round 11): the cogroup/
-    # snapshot tiers compute theirs with the same einsum expansion, so
-    # per-(query, probe) LUT values stay bit-equal across the tiers
-    books_sq = np.einsum("mks,mks->mk", books, books)
-    lut = _residual_luts(
-        res.reshape(nq * nprobe, m * sub_dim), books, books_sq, m, sub_dim,
-        model.pq.num_centroids,
-    ).reshape(nq, nprobe, m, model.pq.num_centroids)
-    pos = -np.ones((nq, nlist), dtype=np.int64)
-    for i in range(nq):
-        pos[i, order[i]] = np.arange(nprobe)
-    cells_union = sorted({int(c) for row in order for c in row})
-
-    # same shortlist floor as ivfpq_search_rerank (max(5k, 50)) so batch
-    # and single-query candidate sets match at small k
-    fetch = max(shortlist if shortlist is not None else max(5 * k, 50), k) if rerank else k
-    # project to the kernel's three columns (tags/passthroughs stay out of
-    # the Arrow transfer — same rationale as the DF path's cogroup)
-    flt = encoded.filter(F.col(CLUSTER_COL).isin(cells_union)).select(
-        id_col, CLUSTER_COL, CODE_COL
-    )
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: list[list] = [[] for _ in range(nq)]  # per-query (dist, id) rows
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack([np.asarray(c) for c in pdf[CODE_COL]])
-            cells = pdf[CLUSTER_COL].to_numpy().astype(np.int64)
-            ids = pdf[id_col].to_numpy()
-            for i in range(nq):
-                p = pos[i, cells]
-                midx = np.nonzero(p >= 0)[0]
-                if not len(midx):
-                    continue
-                c = codes[midx]  # (nm, m)
-                lut_i = lut[i, p[midx]]  # (nm, m, k')
-                # sequential s-ascending accumulation — the same float-add
-                # order as the cogroup/snapshot tiers' _adc_dists, so the
-                # summed distances stay bit-equal across the tiers
-                dist = np.take_along_axis(lut_i[:, 0, :], c[:, :1], axis=1)[:, 0].copy()
-                for s in range(1, m):
-                    dist += np.take_along_axis(
-                        lut_i[:, s, :], c[:, s : s + 1], axis=1
-                    )[:, 0]
-                ids_m = ids[midx]
-                sel = np.lexsort((ids_m, dist))[:fetch]  # (dist, id) order
-                acc[i].extend(zip(dist[sel], ids_m[sel]))
-                if len(acc[i]) > 2 * fetch:
-                    # keep the accumulator bounded at O(fetch) per query
-                    # instead of growing with batch count (per-task memory
-                    # must not scale with partition size)
-                    acc[i].sort()
-                    del acc[i][fetch:]
-        rows = []
-        for i in range(nq):
-            if acc[i]:
-                acc[i].sort()
-                for d2, rid in acc[i][:fetch]:
-                    rows.append((qids[i], rid, float(np.sqrt(d2))))
-        yield pd.DataFrame(rows, columns=["query_id", id_col, "dist"])
-
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            encoded.schema[id_col],
-            StructField("dist", DoubleType()),
-        ]
-    )
-    raw = flt.mapInPandas(part, schema)
-    payload = F.struct(F.col("dist"), F.col(id_col).alias("id"))
-    merged = raw.groupBy("query_id").agg(
-        F.slice(F.array_sort(F.collect_list(payload)), 1, fetch).alias("_cand")
-    )
-    cand = merged.select("query_id", F.explode("_cand").alias("_c")).select(
-        "query_id", F.col("_c.id").alias(id_col), F.col("_c.dist").alias("dist")
-    )
-    if not rerank:
-        return cand
-    if df is None:
-        raise ValueError("rerank=True needs the float table (df)")
-    spark = encoded.sparkSession
-    qdf = spark.createDataFrame(
-        [(int(qid), [float(v) for v in vec]) for qid, vec in queries],
-        "query_id bigint, _qvec array<double>",
-    )
-    joined = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .join(cand.select("query_id", id_col), id_col)
-        .join(F.broadcast(qdf), "query_id")
-    )
-    # float32 query cast matches the single-query paths' F.lit(...).cast
-    # ("array<float>") so batch and per-query distances are bit-equal
-    d = euclidean(F.col(vec_col), F.col("_qvec").cast("array<float>"))
-    scored = joined.select("query_id", id_col, d.alias("dist"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def _ivfpq_knn_join_df(
-    encoded: DataFrame,
-    model: IVFPQModel,
-    queries: DataFrame,
-    k: int,
-    nprobe: int,
-    df: DataFrame | None,
-    rerank: bool,
-    shortlist: int | None,
-    id_col: str,
-    vec_col: str,
-    data_salt: int,
-) -> DataFrame:
-    """DataFrame-query-side ivfpq_knn_join (see its docstring). Stages:
-    probe-assign (mapInPandas, narrow) -> prune codes to probed cells
-    (broadcast semi join = partition pruning on an ivf_write layout) ->
-    cogroup on (cell, salt) scoring with task-local residual LUTs ->
-    bounded global merge -> optional exact rerank. No collect anywhere;
-    every driver-side object is model-sized (codebooks), never
-    query- or data-sized."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
+    from neighborly_spark.session import local_relation_queries
 
     if data_salt < 1:
         raise ValueError("data_salt must be >= 1")
+    spark = encoded.sparkSession
+    if not isinstance(queries, DataFrame):
+        queries = local_relation_queries(spark, queries, elem_type="double")
     m, sub_dim, kp = model.pq.m, model.pq.sub_dim, model.pq.num_centroids
     coarse = np.asarray(model.ivf.centroids, dtype=np.float64)
     books = np.stack([np.asarray(c, dtype=np.float64) for c in model.pq.centroids])
+    # same shortlist floor as ivfpq_search_rerank (max(5k, 50)) so batch
+    # and single-query candidate sets match at small k
     fetch = max(shortlist if shortlist is not None else max(5 * k, 50), k) if rerank else k
-    spark = encoded.sparkSession
     # widen a narrow query batch before the python probe stages: a cached
     # limit() table is ONE partition by construction and would serialize
     # probe-assign onto a single worker (partitioning.py, round 11)
@@ -905,8 +745,9 @@ def _ivfpq_knn_join_df(
 def _probe_assign(qsrc: DataFrame, coarse, nprobe: int, rotation=None) -> DataFrame:
     """Vectorized probe-cell assignment over a (query_id, query_embedding)
     DataFrame: nprobe rows out per query, same squared-distance matrix +
-    stable argsort as the list path's _probe_cells, so per-query probed
-    cells (and their order) are equal across every ivfpq query path.
+    stable argsort as the single-query path's _probe_cells, so per-query
+    probed cells (and their order) are equal across every ivfpq query
+    path.
     ``rotation`` (OPQ) rotates the queries batch-side BEFORE probing; the
     emitted query_embedding is the ROTATED vector, so downstream residual
     LUTs stay in the codebooks' space with no second choke point."""
@@ -1189,9 +1030,9 @@ def ivfpq_knn_join_snapshot(
     embedding, cell) probe assignments (query-sized x nprobe); each
     worker reads its cell's immutable parquet directly and keeps the
     id-sorted code matrix hot in a per-worker LRU keyed by the snapshot
-    ``version``. The cogroup path (ivfpq_knn_join's DataFrame tier)
-    re-shuffles the probed cells' code rows on EVERY batch — right for
-    fresh in-memory artifacts, a per-batch re-ship of a static artifact
+    ``version``. The cogroup path (ivfpq_knn_join) re-shuffles the
+    probed cells' code rows on EVERY batch — right for fresh in-memory
+    artifacts, a per-batch re-ship of a static artifact
     when serving a durable index (exactly the tax the hnsw snapshot tier
     eliminated for graphs; here it is m+8 bytes/row instead of ~20
     MB/shard, so the win is proportionally smaller but the shape is the

@@ -1209,8 +1209,9 @@ class SearchService:
         """Index-backed batch search: top-k per query in ONE pass over the
         method's index artifact (vs one scan per query via search()).
         ``queries`` is a (query_id, query_embedding) DataFrame or a
-        [(query_id, vector), ...] list — normalized internally to what the
-        tier needs. Methods: the exact family (routes through knn_join's
+        [(query_id, vector), ...] list; a list becomes a JVM LocalRelation,
+        so every tier serves both shapes through its one DataFrame path.
+        Methods: the exact family (routes through knn_join's
         cardinality planner), 'lsh' (approx_knn_join: one bucket join for
         all queries), 'bq' (bq_knn_join: one Hamming-prefilter scan
         of the packed codes), 'sq' (sq_knn_join: one dequantized code-table
@@ -1254,14 +1255,6 @@ class SearchService:
                     "queries contain a null/NaN/Inf embedding — distances "
                     "would be undefined (same contract as list inputs)"
                 )
-
-        def as_list():
-            if isinstance(queries, DataFrame):
-                return [
-                    (int(r[0]), list(r[1]))
-                    for r in queries.select("query_id", "query_embedding").collect()
-                ]
-            return [(int(q[0]), list(q[1])) for q in queries]
 
         def as_df():
             if isinstance(queries, DataFrame):
@@ -1338,12 +1331,8 @@ class SearchService:
                 df=base_df if rerank else None, id_col=self.id_col,
                 vec_col=self.vec_col, rerank=rerank, shortlist=shortlist,
             ))
-        # DataFrame-native query sides (round-6 VERDICT 1): a DataFrame
-        # query table flows into the ivfpq/hnsw tiers AS a DataFrame — zero
-        # query-side collects, so a million-row query table joins the
-        # prebuilt index distributed end-to-end. List inputs keep the
-        # closure paths (lower latency at bounded batch sizes).
-        qarg = queries if isinstance(queries, DataFrame) else None
+        # the ivfpq/hnsw tiers take either input shape as-is: each turns a
+        # list into its own float64 LocalRelation (round-6 VERDICT 1)
 
         if method == "ivfpq":
             self._quant_metric_guard("ivfpq", self._ivfpq_model is not None, metric)
@@ -1363,7 +1352,7 @@ class SearchService:
                 pth, ver = self._ivfpq_snapshot
                 return _serve(IVFPQ.ivfpq_knn_join_snapshot(
                     self.df.sparkSession, pth, self._ivfpq_model,
-                    qarg if qarg is not None else as_list(), k, version=ver,
+                    queries, k, version=ver,
                     nprobe=ivfpq_nprobe, df=base_df if rerank else None,
                     rerank=rerank, shortlist=shortlist,
                     id_col=self.id_col, vec_col=self.vec_col,
@@ -1372,7 +1361,7 @@ class SearchService:
                 ))
             return _serve(IVFPQ.ivfpq_knn_join(
                 self._filtered_artifact(self._ivfpq_encoded, pred, "ivfpq"),
-                self._ivfpq_model, qarg if qarg is not None else as_list(), k,
+                self._ivfpq_model, queries, k,
                 nprobe=ivfpq_nprobe, df=base_df if rerank else None,
                 rerank=rerank, shortlist=shortlist,
                 id_col=self.id_col, vec_col=self.vec_col,
@@ -1412,7 +1401,7 @@ class SearchService:
                 pth, ver, pids = self._hnsw_snapshot
                 return _serve(hnsw_search_batch_snapshot(
                     self.df.sparkSession, pth, pids,
-                    qarg if qarg is not None else as_list(), k,
+                    queries, k,
                     version=ver, ef=hnsw_ef, probe_shards=hnsw_probe_shards,
                     routing=self._hnsw_routing if hnsw_probe_shards is not None else None,
                     tag_any=tag_any, tag_all=tag_all,
@@ -1423,7 +1412,7 @@ class SearchService:
                     query_salt=hnsw_query_salt,
                 ))
             return _serve(hnsw_search_batch(
-                graph, qarg if qarg is not None else as_list(), k, ef=hnsw_ef,
+                graph, queries, k, ef=hnsw_ef,
                 probe_shards=hnsw_probe_shards,
                 routing=self._hnsw_routing if self._hnsw_spatial else None,
                 allowed_col=allowed_col,

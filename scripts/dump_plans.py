@@ -1,7 +1,8 @@
-"""Dump explain('formatted') for every registry query to plans/r11/.
+"""Dump explain('formatted') for every registry query to plans/<round>/.
 
-Usage: python scripts/dump_plans_r11.py <suffix> [sf_dir]
-  suffix: 'before' or 'after' — files land as plans/r11/<query>_<suffix>.txt
+Usage: python scripts/dump_plans.py <round> <suffix> [sf_dir]
+  round:  plan directory name, e.g. 'r12' — files land under plans/<round>/
+  suffix: 'before' or 'after' — files land as plans/<round>/<query>_<suffix>.txt
 
 Plan-only (no execution): registry build() is lazy, so this is cheap and
 safe to run alongside other work. Bench-local entries that need fitted
@@ -17,8 +18,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from neighborly_spark.parity import REGISTRY  # noqa: E402
-from neighborly_spark.session import get_spark  # noqa: E402
+USAGE = "usage: python scripts/dump_plans.py <round> <suffix> [sf_dir]"
 
 
 def formatted(df) -> str:
@@ -29,13 +29,20 @@ def formatted(df) -> str:
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
+    if len(sys.argv) < 3:
+        print(USAGE, file=sys.stderr)
+        sys.exit(2)
+    rnd, suffix = sys.argv[1], sys.argv[2]
+    sf = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
+
+    from neighborly_spark.parity import REGISTRY
+    from neighborly_spark.session import get_spark
+
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r11"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name=f"plans_r11_{suffix}", cpus=4)
+    spark = get_spark(app_name=f"plans_{rnd}_{suffix}", cpus=4)
     spark.sparkContext.setLogLevel("ERROR")
     for name, pq in REGISTRY.items():
         try:

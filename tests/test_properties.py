@@ -2,8 +2,9 @@
 with parameterized NUnit cases (SURVEY §5); we state them as laws.
 
 Driver-side evaluation through Spark: each property evaluates the SAME
-Column expressions used by the operators, on a one-row DataFrame per
-example batch (batched into a single Spark job per property for speed).
+Column expressions used by the operators over a DataFrame of its example
+batch; the distance laws put every expression of an example in one
+select, so each example is one Spark job.
 """
 
 from __future__ import annotations
@@ -27,13 +28,27 @@ def _eval_pairs(spark, pairs, expr_fn):
     return [r.v for r in df.select(expr_fn(F.col("a"), F.col("b")).alias("v")).collect()]
 
 
+def _eval_orderings(spark, rows, schema, exprs):
+    """Evaluate every named (metric, ordering) expression over ``rows`` in
+    ONE select — one Spark job per example, not one per expression.
+    Returns {name: [value per row]}."""
+    df = spark.createDataFrame(rows, schema)
+    out = df.select(*[e.alias(name) for name, e in exprs.items()]).collect()
+    return {name: [r[name] for r in out] for name in exprs}
+
+
 @settings(max_examples=8, deadline=None)
 @given(st.lists(st.tuples(vec, vec), min_size=1, max_size=8))
 def test_metric_symmetry_and_identity(spark, pairs):
-    for metric in ["euclidean", "manhattan", "chebyshev", "minkowski"]:
-        ab = _eval_pairs(spark, pairs, lambda a, b, m=metric: D.metric_expr(m, a, b))
-        ba = _eval_pairs(spark, [(b, a) for a, b in pairs], lambda a, b, m=metric: D.metric_expr(m, a, b))
-        aa = _eval_pairs(spark, [(a, a) for a, _ in pairs], lambda a, b, m=metric: D.metric_expr(m, a, b))
+    metrics = ["euclidean", "manhattan", "chebyshev", "minkowski"]
+    a, b = F.col("a"), F.col("b")
+    orderings = {"ab": (a, b), "ba": (b, a), "aa": (a, a)}
+    vals = _eval_orderings(spark, pairs, "a array<float>, b array<float>", {
+        f"{m}_{o}": D.metric_expr(m, x, y)
+        for m in metrics for o, (x, y) in orderings.items()
+    })
+    for metric in metrics:
+        ab, ba, aa = (vals[f"{metric}_{o}"] for o in ("ab", "ba", "aa"))
         assert all(x == pytest.approx(y, abs=1e-9) for x, y in zip(ab, ba)), metric
         assert all(x == pytest.approx(0.0, abs=1e-9) for x in aa), metric
         assert all(x >= 0 for x in ab), metric
@@ -42,10 +57,17 @@ def test_metric_symmetry_and_identity(spark, pairs):
 @settings(max_examples=5, deadline=None)
 @given(st.lists(st.tuples(vec, vec, vec), min_size=1, max_size=5))
 def test_triangle_inequality_euclidean_manhattan(spark, triples):
-    for metric in ["euclidean", "manhattan"]:
-        ac = _eval_pairs(spark, [(a, c) for a, _, c in triples], lambda a, b, m=metric: D.metric_expr(m, a, b))
-        ab = _eval_pairs(spark, [(a, b) for a, b, _ in triples], lambda a, b, m=metric: D.metric_expr(m, a, b))
-        bc = _eval_pairs(spark, [(b, c) for _, b, c in triples], lambda a, b, m=metric: D.metric_expr(m, a, b))
+    metrics = ["euclidean", "manhattan"]
+    a, b, c = F.col("a"), F.col("b"), F.col("c")
+    orderings = {"ac": (a, c), "ab": (a, b), "bc": (b, c)}
+    vals = _eval_orderings(
+        spark, triples, "a array<float>, b array<float>, c array<float>", {
+            f"{m}_{o}": D.metric_expr(m, x, y)
+            for m in metrics for o, (x, y) in orderings.items()
+        },
+    )
+    for metric in metrics:
+        ac, ab, bc = (vals[f"{metric}_{o}"] for o in ("ac", "ab", "bc"))
         for x, y, z in zip(ac, ab, bc):
             assert x <= y + z + 1e-6, metric
 
@@ -359,6 +381,46 @@ def test_hnsw_filtered_subset_and_exact_scan_fallback(vecs, seed, modulus):
         order = np.lexsort((idx, d[idx]))[:k]
         want = [(int(idx[j]), float(d[idx[j]])) for j in order]
         assert got == want
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.integers(min_value=2, max_value=80),
+       st.integers(min_value=0, max_value=2**31 - 2),
+       st.integers(min_value=1, max_value=8))
+def test_search_layer_all_true_mask_equals_unfiltered(n, seed, k):
+    """Beam law: the one beam kernel (_search_layer) given an all-true
+    ``allowed`` mask returns exactly the node order it returns with
+    allowed=None — at ef=1 (greedy descent), ef=k, and ef larger than the
+    shard, from layer-0 entry points and from upper-layer ones. Seeded
+    gaussian shards (not hypothesis floats) so the beam sees varied
+    geometry where its expansion order matters."""
+    import numpy as np
+
+    from neighborly_spark.operators.hnsw import _ShardGraph
+
+    rng = np.random.RandomState(seed)
+    x = rng.normal(0.0, 5.0, (n, 6))
+    # small M keeps the beam walking; ml=1.0 lifts ~37% of nodes above
+    # layer 0, so most shards have upper layers to search
+    g = _ShardGraph(x, 4, 8, 32, 1.0, np.random.RandomState(seed))
+    for i in range(len(x)):
+        g.insert(i)
+    g.finalize()
+    q = rng.normal(0.0, 5.0, x.shape[1]).astype(np.float32)
+    everyone = np.ones(len(x), dtype=bool)
+    starts = [
+        (0, rng.choice(len(x), size=min(3, len(x)), replace=False)),
+        (int(g.levels[g.entry]), np.array([g.entry])),
+    ]
+    upper = np.flatnonzero(g.levels >= 1)
+    if upper.size:
+        starts.append((1, upper[:3]))
+    for layer, eps in starts:
+        eps = np.asarray(eps, dtype=np.int64)
+        for ef in (1, k, len(x) + 5):
+            want = g._search_layer(q, eps, ef, layer)
+            got = g._search_layer(q, eps, ef, layer, everyone)
+            assert np.array_equal(got, want), (layer, ef)
 
 
 @settings(max_examples=200, deadline=None)
