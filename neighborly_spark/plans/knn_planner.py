@@ -52,7 +52,7 @@ DEFAULT_PROBE_SHARDS = 2
 
 @dataclass
 class KnnJoinPlan:
-    strategy: str  # 'exact' | 'vectorized' | 'lsh'
+    strategy: str  # 'exact' | 'vectorized' | 'blocked' | 'lsh' | 'hnsw' | 'ivfpq' | 'sq'
     reason: str
 
 
@@ -82,7 +82,7 @@ def plan_knn_join(
             return KnnJoinPlan(
                 "ivfpq", f"prebuilt IVF+PQ codes serve |Q|={query_count} as a DataFrame from probed cells only"
             )
-        # NOT sq here: sq_knn_join scans ALL code rows per query (|D|x|Q|
+        # NOT sq here: the sq batch join scans ALL code rows per query (|D|x|Q|
         # work) and force-broadcasts the query side — both are wrong
         # beyond the budget. hnsw/ivfpq prune the data side per query.
         if allow_approx:
@@ -127,143 +127,47 @@ def knn_join_auto(
     data_count: int | None = None,
     query_count: int | None = None,
     allow_approx: bool = True,
-    hnsw_graph: DataFrame | None = None,
-    hnsw_spatial: bool = False,
-    hnsw_routing: DataFrame | None = None,
-    hnsw_probe_shards: int | None = None,
-    hnsw_trust_routing: bool = False,
-    hnsw_snapshot: tuple | None = None,  # (graph_path, version, part_ids[, sq8]) —
-    # serve the hnsw tier WORKER-RESIDENT from the saved shard parquet
-    # (hnsw_search_batch_snapshot) instead of re-shipping ~20 MB/shard of
-    # graph bytes through the cogroup per batch; probe routing composes
-    hnsw_ef: int | None = None,  # hnsw tier beam width (None = EF_DEFAULT)
-    ivfpq_nprobe: int = 10,  # ivfpq tier probed coarse cells — 10 is the
-    # gate-verified operating point on uniform data (recall 0.87 at
-    # nlist=16, docs/RECALL.md); clusterable corpora can probe far fewer
-    # (round-8 VERDICT 3: callers could not reach this knob before)
-    ivfpq_index: tuple | None = None,  # (encoded DataFrame, IVFPQModel)
-    ivfpq_snapshot: tuple | None = None,  # (codes_path, version) — serve the
-    # ivfpq tier WORKER-RESIDENT from the saved cluster-partitioned code
-    # table (ivfpq_knn_join_snapshot) instead of shuffling code rows
-    # through the cogroup; results bit-equal, requires ivfpq_index for
-    # the model
-    sq_index: tuple | None = None,  # (codes DataFrame, SQModel)
+    indexes: dict | None = None,
 ) -> tuple[DataFrame, KnnJoinPlan]:
     """Plan and execute; returns (result, plan). Counts may be passed from
-    table stats to avoid the count() jobs. Pass prebuilt index artifacts
-    (operators.hnsw.hnsw_build output; (ivfpq_encode output, IVFPQModel);
-    (sq code table, SQModel)) to enable the index tiers.
+    table stats to avoid the count() jobs.
 
-    ``hnsw_spatial=True`` (a graph built with hnsw_build(spatial=True), or
-    any caller-supplied ``hnsw_routing`` table) makes the hnsw tier
-    PROBE-ROUTED (round-7 VERDICT 1): each query descends only its top-p
-    shards by the centroid+radius lower bound (p =
-    ``hnsw_probe_shards``, default DEFAULT_PROBE_SHARDS — recall 1.00 at
-    p=1 on the measured spatial layouts, docs/RECALL.md) instead of every
-    shard. At production shard counts (~2e5 shards at 1e10 rows) the
-    exhaustive fan-out is |Q| x shards beam work — the routed form is the
-    tier's actual selling point. Hash-sharded graphs (the default build)
-    stay exhaustive BY DESIGN: hash shards are uniform subsamples, every
-    centroid sits at the global mean, and probing p of S recovers only
-    ~p/S of the neighbors (measured: 0.03 recall at p=1 of 16) — routing
-    is a property of the layout, not the table."""
+    ``indexes`` enables the index tiers: ``{tier: fn}`` for tiers among
+    'hnsw', 'ivfpq' and 'sq', where ``fn(query_df)`` serves a
+    (query_id, query_embedding) DataFrame against the prebuilt index and
+    returns (query_id, id, dist). The planner only picks the tier and
+    renames the query columns in and out; the serving itself (operator,
+    durable vs in-memory artifact, probe routing, knobs) belongs to the
+    caller — SearchService.knn_join passes its one per-tier batch code,
+    the same code search_batch serves."""
     from neighborly_spark.operators.knn import knn_join, knn_join_blocked, knn_join_vectorized
     from neighborly_spark.operators.lsh import approx_knn_join
 
-    if ivfpq_snapshot is not None and ivfpq_index is None:
-        # without the model the snapshot cannot be served, and without
-        # ivfpq_index the planner would never pick the ivfpq tier — the
-        # snapshot would be SILENTLY ignored (round-9 ADVICE: fail loud)
-        raise ValueError(
-            "ivfpq_snapshot requires ivfpq_index for the IVFPQModel "
-            "(the snapshot path holds only the encoded cells)"
-        )
+    indexes = indexes or {}
     nd = data_count if data_count is not None else data.count()
     nq = query_count if query_count is not None else queries.count()
     plan = plan_knn_join(
         nd, nq, dim, allow_approx=allow_approx,
-        has_hnsw_index=hnsw_graph is not None,
-        has_ivfpq_index=ivfpq_index is not None,
-        has_sq_index=sq_index is not None,
+        has_hnsw_index="hnsw" in indexes,
+        has_ivfpq_index="ivfpq" in indexes,
+        has_sq_index="sq" in indexes,
     )
-    if plan.strategy == "exact":
-        out = knn_join(data, queries, k, id_col=id_col, vec_col=vec_col, query_id_col=query_id_col, query_vec_col=query_vec_col)
-    elif plan.strategy == "hnsw":
-        from neighborly_spark.operators.hnsw import hnsw_routing_table, hnsw_search_batch
-
+    cols = dict(id_col=id_col, vec_col=vec_col, query_id_col=query_id_col, query_vec_col=query_vec_col)
+    if plan.strategy in indexes:
         # DataFrame query side end-to-end (round 7): no collect at any |Q|
         qdf = queries.select(
             F.col(query_id_col).alias("query_id"),
             F.col(query_vec_col).alias("query_embedding"),
         )
-        # probe-route spatial layouts (round-7 VERDICT 1): |Q| x p shard
-        # assignments instead of the exhaustive |Q| x shards fan-out; hash
-        # layouts stay exhaustive (see docstring — routing cannot
-        # discriminate uniform subsamples)
-        probe = routing = None
-        if hnsw_spatial or hnsw_routing is not None:
-            routing = hnsw_routing if hnsw_routing is not None else hnsw_routing_table(hnsw_graph)
-            probe = hnsw_probe_shards if hnsw_probe_shards is not None else DEFAULT_PROBE_SHARDS
-        if hnsw_snapshot is not None:
-            # durable graph: serve worker-resident — only (query, shard)
-            # assignments shuffle, graph bytes never enter the plan
-            # (round 8, same contract as search_batch's snapshot route);
-            # probe routing composes unchanged
-            from neighborly_spark.operators.hnsw import hnsw_search_batch_snapshot
-
-            path, ver, pids = hnsw_snapshot[:3]
-            # optional 4th element: SQ8 payload params of a quantized
-            # artifact (SearchService.save(hnsw_sq8=True)) — workers
-            # dequantize at shard load; None/absent = float artifact
-            sq8 = hnsw_snapshot[3] if len(hnsw_snapshot) > 3 else None
-            out = hnsw_search_batch_snapshot(
-                data.sparkSession, path, pids, qdf, k, version=ver, ef=hnsw_ef,
-                probe_shards=probe, routing=routing, sq8=sq8,
-            ).withColumnsRenamed({"query_id": query_id_col, "id": id_col})
-        else:
-            out = hnsw_search_batch(
-                hnsw_graph, qdf, k, ef=hnsw_ef, probe_shards=probe, routing=routing,
-                # a routing table derived HERE from the live graph cannot be
-                # stale; caller-supplied tables keep the liveness guard unless
-                # the caller vouches (SearchService refreshes on mutation)
-                trust_routing=hnsw_routing is None or hnsw_trust_routing,
-            ).withColumnsRenamed({"query_id": query_id_col, "id": id_col})
-    elif plan.strategy == "ivfpq":
-        from neighborly_spark.operators.ivfpq import ivfpq_knn_join, ivfpq_knn_join_snapshot
-
-        encoded, model = ivfpq_index
-        qdf = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("query_embedding"),
+        out = indexes[plan.strategy](qdf).withColumnsRenamed(
+            {"query_id": query_id_col, "id": id_col}
         )
-        if ivfpq_snapshot is not None:
-            # durable index: serve worker-resident — only probe assignments
-            # shuffle, the static code table never re-ships (round 8;
-            # bit-equal to the cogroup path)
-            path, ver = ivfpq_snapshot
-            out = ivfpq_knn_join_snapshot(
-                data.sparkSession, path, model, qdf, k, version=ver,
-                nprobe=ivfpq_nprobe, df=data, id_col=id_col, vec_col=vec_col,
-            ).withColumnRenamed("query_id", query_id_col)
-        else:
-            out = ivfpq_knn_join(
-                encoded, model, qdf, k,
-                nprobe=ivfpq_nprobe, df=data, id_col=id_col, vec_col=vec_col,
-            ).withColumnRenamed("query_id", query_id_col)
-    elif plan.strategy == "sq":
-        from neighborly_spark.operators.quantization import sq_knn_join
-
-        codes, model = sq_index
-        out = sq_knn_join(
-            codes, model, queries, k, df=data, id_col=id_col, vec_col=vec_col,
-            query_id_col=query_id_col, query_vec_col=query_vec_col,
-        )
+    elif plan.strategy == "exact":
+        out = knn_join(data, queries, k, **cols)
     elif plan.strategy == "vectorized":
-        out = knn_join_vectorized(data, queries, k, id_col=id_col, vec_col=vec_col, query_id_col=query_id_col, query_vec_col=query_vec_col)
+        out = knn_join_vectorized(data, queries, k, **cols)
     elif plan.strategy == "blocked":
-        out = knn_join_blocked(data, queries, k, id_col=id_col, vec_col=vec_col, query_id_col=query_id_col, query_vec_col=query_vec_col)
+        out = knn_join_blocked(data, queries, k, **cols)
     else:
-        out = approx_knn_join(
-            data, queries, k, radius_for_lsh, id_col=id_col, vec_col=vec_col, query_id_col=query_id_col, query_vec_col=query_vec_col, dim=dim
-        )
+        out = approx_knn_join(data, queries, k, radius_for_lsh, dim=dim, **cols)
     return out, plan

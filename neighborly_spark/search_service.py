@@ -20,6 +20,8 @@ and applies the text-length threshold + prefix union (Q3).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -591,6 +593,57 @@ class SearchService:
         self._hnsw_routing = HN.hnsw_routing_table(self._hnsw_graph).cache()
         self._hnsw_routing.count()
 
+    def _hnsw_request(self, pred, probe_shards, tag_any, tag_all):
+        """The hnsw request checks search() and the batch tier share;
+        returns (graph, allowed_col, snapshot). A tag predicate becomes
+        the ``_allowed`` mask over the artifact-embedded tags (round-5
+        VERDICT 2 filtered descent — an expression, no join). Probe
+        routing needs a spatial layout and a routing table. ``snapshot``
+        is None for an in-memory graph, else hnsw_search_batch_snapshot
+        bound to the saved shards, routing and tag filter — call it as
+        ``snapshot(queries, k, ef=...)``: only the queries enter its plan,
+        workers read + LRU-cache their shards' parquet, and the tags ride
+        the snapshot shards (whose columns mirror the graph checked
+        here)."""
+        from neighborly_spark.operators import hnsw as HN
+
+        graph, allowed_col = self._hnsw_graph, None
+        if pred is not None:
+            if self.tags_col not in graph.columns:
+                raise ValueError(
+                    "the hnsw index was built without the tags "
+                    "column; rebuild it (build_index) to enable "
+                    "tag-filtered search"
+                )
+            allowed_col = "_allowed"
+            graph = graph.withColumn(allowed_col, pred)
+        if probe_shards is not None:
+            if not self._hnsw_spatial:
+                # the service KNOWS the layout (the standalone operator
+                # doesn't): hash shards are spatially uniform, so probe
+                # routing over them collapses recall (~p/num_shards —
+                # measured 0.03-0.41 vs the 0.8 bar, docs/RECALL.md
+                # round-4 table). Refuse rather than silently serve it.
+                raise ValueError(
+                    "hnsw_probe_shards requires a spatial graph layout: "
+                    "build_index('hnsw', spatial=True). The current hash "
+                    "layout must be searched exhaustively "
+                    "(hnsw_probe_shards=None)."
+                )
+            if self._hnsw_routing is None:
+                self._refresh_hnsw_routing()  # e.g. snapshot-loaded graph
+        snapshot = None
+        if self._hnsw_snapshot is not None:
+            pth, ver, pids = self._hnsw_snapshot
+            snapshot = functools.partial(
+                HN.hnsw_search_batch_snapshot, self.df.sparkSession, pth, pids,
+                version=ver, probe_shards=probe_shards,
+                routing=self._hnsw_routing if probe_shards is not None else None,
+                tag_any=tag_any, tag_all=tag_all,
+                tags_col=self.tags_col or "tags", sq8=self._hnsw_sq8,
+            )
+        return graph, allowed_col, snapshot
+
     def remove_vectors(self, ids: list) -> None:
         """Incremental RemoveById: rows filter out of the table; HNSW
         rebuilds ONLY the shards that contained a removed id
@@ -958,57 +1011,11 @@ class SearchService:
                 from neighborly_spark.operators import hnsw as HN
 
                 self._quant_metric_guard("hnsw", True, metric)
-                graph = self._hnsw_graph
-                allowed_col = None
-                if pred is not None:
-                    # filtered descent (round-5 VERDICT 2, the
-                    # filtered-HNSW standard): the tag predicate evaluates
-                    # over the artifact-embedded tags column as a plain
-                    # expression (_allowed mask — no join); the shard beam
-                    # traverses everything but ranks only allowed nodes,
-                    # with ef inflated by the filter selectivity and an
-                    # exact-scan fallback under extreme selectivity
-                    # (operators.hnsw._ShardGraph.search_filtered)
-                    if self.tags_col not in graph.columns:
-                        raise ValueError(
-                            "the hnsw index was built without the tags "
-                            "column; rebuild it (build_index) to enable "
-                            "tag-filtered search"
-                        )
-                    allowed_col = "_allowed"
-                    graph = graph.withColumn(allowed_col, pred)
-                if hnsw_probe_shards is not None and not self._hnsw_spatial:
-                    # the service KNOWS the layout (the standalone operator
-                    # doesn't): hash shards are spatially uniform, so probe
-                    # routing over them collapses recall (~p/num_shards —
-                    # measured 0.03-0.41 vs the 0.8 bar, docs/RECALL.md
-                    # round-4 table). Refuse rather than silently serve it.
-                    raise ValueError(
-                        "hnsw_probe_shards requires a spatial graph layout: "
-                        "build_index('hnsw', spatial=True). The current hash "
-                        "layout must be searched exhaustively "
-                        "(hnsw_probe_shards=None)."
-                    )
-                if hnsw_probe_shards is not None and self._hnsw_routing is None:
-                    self._refresh_hnsw_routing()  # e.g. snapshot-loaded graph
-                if self._hnsw_snapshot is not None:
-                    # snapshot-backed graph: serve via the worker-resident
-                    # tier — only the query enters the plan, each worker
-                    # reads + LRU-caches its shard's parquet directly.
-                    # Tag-filtered queries stay worker-resident too (round-6
-                    # VERDICT 2): the tags ride the snapshot shards and the
-                    # allowed mask evaluates worker-side (the tags_col
-                    # presence was already validated against the graph's
-                    # columns above, and the snapshot mirrors the graph)
-                    pth, ver, pids = self._hnsw_snapshot
-                    hits = HN.hnsw_search_batch_snapshot(
-                        self.df.sparkSession, pth, pids, [(0, query_vec)], k,
-                        version=ver, ef=hnsw_ef, probe_shards=hnsw_probe_shards,
-                        routing=self._hnsw_routing if hnsw_probe_shards is not None else None,
-                        tag_any=tag_any, tag_all=tag_all,
-                        tags_col=self.tags_col or "tags",
-                        sq8=self._hnsw_sq8,
-                    ).drop("query_id")
+                graph, allowed_col, snapshot = self._hnsw_request(
+                    pred, hnsw_probe_shards, tag_any, tag_all
+                )
+                if snapshot is not None:
+                    hits = snapshot([(0, query_vec)], k, ef=hnsw_ef).drop("query_id")
                 else:
                     hits = HN.hnsw_search(
                         graph, query_vec, k, ef=hnsw_ef,
@@ -1111,12 +1118,22 @@ class SearchService:
         then degrades to blocked). Counts can come from table stats to skip
         the planner's count() jobs.
 
-        ``ivfpq_nprobe`` / ``hnsw_ef`` reach the planner's index tiers
-        (round-8 VERDICT 3: clusterable corpora shouldn't pay the uniform-
-        data default's 2.5x probe I/O just because the join was planner-
-        routed). Defaults match search_batch's: nprobe=10, ef=EF_DEFAULT.
-        No-ops when the planner picks a non-index strategy."""
-        from neighborly_spark.plans.knn_planner import KnnJoinPlan, knn_join_auto
+        The built, euclidean hnsw/ivfpq/sq indexes enter the planner as
+        its index tiers, each served by _batch_tier — the same code
+        search_batch(method=tier) runs, so a planner-routed join serves a
+        tier exactly as the batch call does (snapshot-backed artifacts
+        worker-resident, spatial graphs probe-routed over
+        DEFAULT_PROBE_SHARDS shards, hash layouts exhaustively).
+        ``ivfpq_nprobe`` / ``hnsw_ef`` reach those tiers (round-8 VERDICT
+        3: clusterable corpora shouldn't pay the uniform-data default's
+        2.5x probe I/O just because the join was planner-routed). Defaults
+        match search_batch's: nprobe=10, ef=EF_DEFAULT. No-ops when the
+        planner picks a non-index strategy."""
+        from neighborly_spark.plans.knn_planner import (
+            DEFAULT_PROBE_SHARDS,
+            KnnJoinPlan,
+            knn_join_auto,
+        )
 
         if require_exact_floats:
             from neighborly_spark.operators.knn import knn_join as exact_knn_join
@@ -1127,6 +1144,11 @@ class SearchService:
             )
             plan = KnnJoinPlan("exact", "caller requires sequential-fold float semantics")
         else:
+            built = {"hnsw": self._hnsw_graph, "ivfpq": self._ivfpq_model, "sq": self._sq_model}
+            knobs = dict(
+                k=k, ivfpq_nprobe=ivfpq_nprobe, hnsw_ef=hnsw_ef,
+                hnsw_probe_shards=DEFAULT_PROBE_SHARDS if self._hnsw_spatial else None,
+            )
             out, plan = knn_join_auto(
                 self.df.select(self.id_col, self.vec_col),
                 queries,
@@ -1139,54 +1161,14 @@ class SearchService:
                 data_count=data_count,
                 query_count=query_count,
                 allow_approx=allow_approx,
-                hnsw_graph=(
-                    self._hnsw_graph
-                    if self._index_metric.get("hnsw", "euclidean") == "euclidean"
-                    else None
-                ),
-                # spatial layouts probe-route in the planner's hnsw tier
-                # (round-7 VERDICT 1); the service refreshes its routing
-                # table on every mutation, so it is never stale
-                hnsw_spatial=self._hnsw_spatial,
-                hnsw_routing=self._hnsw_routing if self._hnsw_spatial else None,
-                hnsw_trust_routing=True,
-                hnsw_ef=hnsw_ef,
-                ivfpq_nprobe=ivfpq_nprobe,
-                # durable graph serving: the planner's hnsw tier reads the
-                # saved shards worker-resident instead of re-shipping graph
-                # bytes (round 8; euclidean graphs only — same gate as the
-                # hnsw_graph arg above; cleared by mutations)
-                hnsw_snapshot=(
-                    # 4th element: SQ8 payload params (None for float
-                    # artifacts) — the planner forwards them to the
-                    # worker-resident dequantize
-                    self._hnsw_snapshot + (self._hnsw_sq8,)
-                    if self._hnsw_snapshot is not None
-                    and self._index_metric.get("hnsw", "euclidean") == "euclidean"
-                    else None
-                ),
-                # durable ivfpq serving: the planner's ivfpq tier reads the
-                # saved code table worker-resident instead of re-shuffling
-                # it (round 8; cleared by mutations like the hnsw snapshot)
-                ivfpq_snapshot=(
-                    self._ivfpq_snapshot
-                    if self._index_metric.get("ivfpq", "euclidean") == "euclidean"
-                    else None
-                ),
-                # cosine-built artifacts hold NORMALIZED-space codes — the
-                # euclidean join planner must not serve them
-                ivfpq_index=(
-                    (self._ivfpq_encoded, self._ivfpq_model)
-                    if self._ivfpq_model is not None
-                    and self._index_metric.get("ivfpq", "euclidean") == "euclidean"
-                    else None
-                ),
-                sq_index=(
-                    (self._sq_codes, self._sq_model)
-                    if self._sq_model is not None
-                    and self._index_metric.get("sq", "euclidean") == "euclidean"
-                    else None
-                ),
+                # cosine-built artifacts hold NORMALIZED-space codes and
+                # graphs — the euclidean join planner must not serve them
+                indexes={
+                    tier: functools.partial(self._batch_tier, tier, **knobs)
+                    for tier, artifact in built.items()
+                    if artifact is not None
+                    and self._index_metric.get(tier, "euclidean") == "euclidean"
+                },
             )
         self.last_join_plan = plan
         return out
@@ -1213,7 +1195,8 @@ class SearchService:
         so every tier serves both shapes through its one DataFrame path.
         Methods: the exact family (routes through knn_join's
         cardinality planner), 'lsh' (approx_knn_join: one bucket join for
-        all queries), 'bq' (bq_knn_join: one Hamming-prefilter scan
+        all queries), and the index tiers of _batch_tier, which knn_join's
+        planner serves too: 'bq' (bq_knn_join: one Hamming-prefilter scan
         of the packed codes), 'sq' (sq_knn_join: one dequantized code-table
         scan), 'ivfpq' (ivfpq_knn_join: one probed-cells pass, per-query
         residual LUTs), 'hnsw' (hnsw_search_batch: each shard graph
@@ -1256,19 +1239,6 @@ class SearchService:
                     "would be undefined (same contract as list inputs)"
                 )
 
-        def as_df():
-            if isinstance(queries, DataFrame):
-                return queries
-            # JVM LocalRelation, not createDataFrame(list): the batch tiers
-            # scan the query frame in MULTIPLE plan branches (prefilter,
-            # pass counts, fallback pools), and a python-RDD-backed frame
-            # pays a python worker round trip per scan
-            from neighborly_spark.session import local_relation_queries
-
-            return local_relation_queries(
-                self.df.sparkSession, queries, elem_type="float"
-            )
-
         pred = self._tag_predicate(tag_any, tag_all)
         base_df = self.df.filter(pred) if pred is not None else self.df
         if cosine_quant:
@@ -1289,20 +1259,15 @@ class SearchService:
                     for qid, vec in queries
                 ]
 
-        def _serve(out: DataFrame) -> DataFrame:
-            if not cosine_quant:
-                return out
-            d = F.col("dist")
-            return out.withColumn("dist", F.lit(1.0) - d * d / F.lit(2.0))
-
         if method in EXACT_METHODS:
             if pred is not None:
                 from neighborly_spark.operators.knn import knn_join as exact_knn_join
 
                 return exact_knn_join(
-                    base_df, as_df(), k, id_col=self.id_col, vec_col=self.vec_col
+                    base_df, self._query_frame(queries), k,
+                    id_col=self.id_col, vec_col=self.vec_col,
                 )
-            return self.knn_join(as_df(), k)
+            return self.knn_join(self._query_frame(queries), k)
         if method == "lsh":
             # bucket join over the (possibly tag-filtered) table — BRP
             # hyperplanes are data-independent, so the fitted model serves
@@ -1311,29 +1276,78 @@ class SearchService:
 
             if self._lsh_model is None:
                 self.build_index("lsh")
-            return _serve(approx_knn_join(
-                base_df, as_df(), k, radius=2.5,
+            out = approx_knn_join(
+                base_df, self._query_frame(queries), k, radius=2.5,
                 id_col=self.id_col, vec_col=self.vec_col,
                 dim=self.dim, model=self._lsh_model,
-            ))
+            )
+        else:
+            out = self._batch_tier(
+                method, queries, k, base_df=base_df, metric=metric,
+                ivfpq_nprobe=ivfpq_nprobe, rerank=rerank, shortlist=shortlist,
+                hnsw_probe_shards=hnsw_probe_shards, hnsw_query_salt=hnsw_query_salt,
+                hnsw_ef=hnsw_ef, tag_any=tag_any, tag_all=tag_all,
+            )
+        if cosine_quant:
+            d = F.col("dist")
+            out = out.withColumn("dist", F.lit(1.0) - d * d / F.lit(2.0))
+        return out
+
+    def _query_frame(self, queries) -> DataFrame:
+        """A query list as a (query_id, query_embedding array<float>)
+        frame; DataFrames pass through. JVM LocalRelation, not
+        createDataFrame(list): the batch tiers scan the query frame in
+        MULTIPLE plan branches (prefilter, pass counts, fallback pools),
+        and a python-RDD-backed frame pays a python worker round trip per
+        scan."""
+        if isinstance(queries, DataFrame):
+            return queries
+        from neighborly_spark.session import local_relation_queries
+
+        return local_relation_queries(self.df.sparkSession, queries, elem_type="float")
+
+    def _batch_tier(
+        self,
+        method: str,
+        queries,
+        k: int,
+        base_df: DataFrame | None = None,
+        metric: str = "euclidean",
+        ivfpq_nprobe: int = 10,
+        rerank: bool = True,
+        shortlist: int | None = None,
+        hnsw_probe_shards: int | None = None,
+        hnsw_query_salt: int = 1,
+        hnsw_ef: int | None = None,
+        tag_any: list | None = None,
+        tag_all: list | None = None,
+    ) -> DataFrame:
+        """THE batch serving code of the bq/sq/ivfpq/hnsw index tiers, with
+        two entry points: search_batch (after it validates and, for
+        cosine, normalizes the queries) and knn_join (which hands it to the
+        planner as the tiers' ``indexes``). ``base_df`` is the
+        tag-filtered, possibly normalized float table (default the
+        table). ``queries`` is a DataFrame or a list — the ivfpq/hnsw
+        operators turn a list into their own float64 LocalRelation
+        (round-6 VERDICT 1). Returns (query_id, id, dist) with raw
+        euclidean distances."""
+        pred = self._tag_predicate(tag_any, tag_all)
+        base_df = self.df if base_df is None else base_df
         if method in ("bq", "binaryquantization"):
             self._quant_metric_guard("bq", self._bq_codes is not None, metric)
-            return _serve(QZ.bq_knn_join(
+            return QZ.bq_knn_join(
                 base_df, self._filtered_artifact(self._bq_codes, pred, "bq"),
-                as_df(), k, self.dim, self._bq_threshold,
+                self._query_frame(queries), k, self.dim, self._bq_threshold,
                 id_col=self.id_col, vec_col=self.vec_col,
-            ))
+            )
         if method == "sq":
             self._quant_metric_guard("sq", self._sq_model is not None, metric)
-            return _serve(QZ.sq_knn_join(
+            return QZ.sq_knn_join(
                 self._filtered_artifact(self._sq_codes, pred, "sq"),
-                self._sq_model, as_df(), k,
+                self._sq_model, self._query_frame(queries), k,
                 df=base_df if rerank else None, id_col=self.id_col,
                 vec_col=self.vec_col, rerank=rerank, shortlist=shortlist,
-            ))
-        # the ivfpq/hnsw tiers take either input shape as-is: each turns a
-        # list into its own float64 LocalRelation (round-6 VERDICT 1)
-
+            )
         if method == "ivfpq":
             self._quant_metric_guard("ivfpq", self._ivfpq_model is not None, metric)
             if self._ivfpq_snapshot is not None and (
@@ -1350,7 +1364,7 @@ class SearchService:
                 # tags-less artifact falls through (to the artifact path's
                 # rebuild-guidance error).
                 pth, ver = self._ivfpq_snapshot
-                return _serve(IVFPQ.ivfpq_knn_join_snapshot(
+                return IVFPQ.ivfpq_knn_join_snapshot(
                     self.df.sparkSession, pth, self._ivfpq_model,
                     queries, k, version=ver,
                     nprobe=ivfpq_nprobe, df=base_df if rerank else None,
@@ -1358,60 +1372,28 @@ class SearchService:
                     id_col=self.id_col, vec_col=self.vec_col,
                     tag_any=tag_any, tag_all=tag_all,
                     tags_col=self.tags_col or "tags",
-                ))
-            return _serve(IVFPQ.ivfpq_knn_join(
+                )
+            return IVFPQ.ivfpq_knn_join(
                 self._filtered_artifact(self._ivfpq_encoded, pred, "ivfpq"),
                 self._ivfpq_model, queries, k,
                 nprobe=ivfpq_nprobe, df=base_df if rerank else None,
                 rerank=rerank, shortlist=shortlist,
                 id_col=self.id_col, vec_col=self.vec_col,
-            ))
+            )
         if method == "hnsw":
             from neighborly_spark.operators.hnsw import hnsw_search_batch
 
             if self._hnsw_graph is None:
                 self.build_index("hnsw", metric=metric)
             self._quant_metric_guard("hnsw", True, metric)
-            graph = self._hnsw_graph
-            allowed_col = None
-            if pred is not None:
-                # same filtered-descent path as search() — the predicate
-                # evaluates over the artifact-embedded tags, no join
-                if self.tags_col not in graph.columns:
-                    raise ValueError(
-                        "the hnsw index was built without the tags column; "
-                        "rebuild it (build_index) to enable tag-filtered "
-                        "search"
-                    )
-                allowed_col = "_allowed"
-                graph = graph.withColumn(allowed_col, pred)
-            if hnsw_probe_shards is not None and not self._hnsw_spatial:
-                raise ValueError(
-                    "hnsw_probe_shards requires a spatial graph layout: "
-                    "build_index('hnsw', spatial=True)."
-                )
-            if self._hnsw_spatial and self._hnsw_routing is None:
-                self._refresh_hnsw_routing()
-            if self._hnsw_snapshot is not None:
-                from neighborly_spark.operators.hnsw import hnsw_search_batch_snapshot
-
-                # filtered + durable stays worker-resident (round-6 VERDICT
-                # 2): tags ride the snapshot shards; the column's presence
-                # was validated against the mirrored graph above
-                pth, ver, pids = self._hnsw_snapshot
-                return _serve(hnsw_search_batch_snapshot(
-                    self.df.sparkSession, pth, pids,
-                    queries, k,
-                    version=ver, ef=hnsw_ef, probe_shards=hnsw_probe_shards,
-                    routing=self._hnsw_routing if hnsw_probe_shards is not None else None,
-                    tag_any=tag_any, tag_all=tag_all,
-                    tags_col=self.tags_col or "tags",
-                    sq8=self._hnsw_sq8,
-                    # large fan-in parallelism knob (round 8): splits each
-                    # shard's queries across hnsw_query_salt tasks
-                    query_salt=hnsw_query_salt,
-                ))
-            return _serve(hnsw_search_batch(
+            graph, allowed_col, snapshot = self._hnsw_request(
+                pred, hnsw_probe_shards, tag_any, tag_all
+            )
+            if snapshot is not None:
+                # large fan-in parallelism knob (round 8): splits each
+                # shard's queries across hnsw_query_salt tasks
+                return snapshot(queries, k, ef=hnsw_ef, query_salt=hnsw_query_salt)
+            return hnsw_search_batch(
                 graph, queries, k, ef=hnsw_ef,
                 probe_shards=hnsw_probe_shards,
                 routing=self._hnsw_routing if self._hnsw_spatial else None,
@@ -1419,7 +1401,7 @@ class SearchService:
                 # the service refreshes routing on every mutation, so the
                 # stale-routing guard's extra part_id scan is unnecessary
                 trust_routing=True,
-            ))
+            )
         raise ValueError(f"unknown batch search method {method!r}")
 
     def range_search(

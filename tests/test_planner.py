@@ -200,10 +200,11 @@ def test_planner_hnsw_tier(spark):
 def test_planner_quantized_tiers(spark):
     """Beyond the exact-BLAS budget with a collectible query side, the
     planner prefers prebuilt indexes by bytes-read per query: hnsw >
-    ivfpq > sq > lsh; executed joins clear the recall bar vs exact."""
+    ivfpq > sq > lsh; executed joins clear the recall bar vs exact and
+    equal search_batch(method=tier) row for row on the same service."""
     from neighborly_spark.operators.knn import knn_join
     from neighborly_spark.parity import load
-    from neighborly_spark.plans.knn_planner import plan_knn_join
+    from neighborly_spark.plans.knn_planner import DEFAULT_PROBE_SHARDS, plan_knn_join
     from neighborly_spark.search_service import SearchService
 
     big, q = 1_000_000_000, 1_000
@@ -233,24 +234,33 @@ def test_planner_quantized_tiers(spark):
     exact_pairs = {
         (r.query_id, r.id) for r in knn_join(emb, queries, k=5).select("query_id", "id").collect()
     }
-    for method, want in (("sq", "sq"), ("ivfpq", "ivfpq")):
+    for method, spatial in (("sq", False), ("ivfpq", False), ("hnsw", False), ("hnsw", True)):
         svc = SearchService(emb, dim=64)
-        svc.build_index(method)
+        svc.build_index(method, spatial=spatial)
         # stats-forced counts beyond the BLAS budget (1e9 x 1000 x 64 >
         # VECTORIZED_WORK_LIMIT); execution still runs on the real 20 queries
         got = svc.knn_join(queries, k=5, data_count=1_000_000_000, query_count=1_000)
-        assert svc.last_join_plan.strategy == want
-        got_pairs = {(r.query_id, r.id) for r in got.collect()}
-        assert len(got_pairs & exact_pairs) / len(exact_pairs) >= 0.8, want
+        assert svc.last_join_plan.strategy == method
+        got_rows = sorted((r.query_id, r.id, r.dist) for r in got.collect())
+        got_pairs = {(q, i) for q, i, _ in got_rows}
+        assert len(got_pairs & exact_pairs) / len(exact_pairs) >= 0.8, method
+        # one dispatch: the planner's tier IS search_batch's tier code —
+        # same rows, same distances (a spatial graph probes the planner's
+        # default shard count)
+        batch = svc.search_batch(
+            queries, k=5, method=method,
+            hnsw_probe_shards=DEFAULT_PROBE_SHARDS if spatial else None,
+        )
+        assert sorted((r.query_id, r.id, r.dist) for r in batch.collect()) == got_rows, method
 
 
 def test_big_query_table_prefers_index_tiers(spark):
     """Round 7: beyond the collect budget, a prebuilt index beats the LSH
     bucket join — the DataFrame-native tiers serve the query TABLE without
-    a collect, so the planner routes hnsw > ivfpq before lsh; and
-    knn_join_auto executes the hnsw tier end-to-end on a DataFrame query
-    side with zero query-side collects."""
-    from neighborly_spark.operators.hnsw import hnsw_build
+    a collect, so the planner routes hnsw > ivfpq before lsh; and the
+    planner-routed join executes the hnsw tier end-to-end on a DataFrame
+    query side with zero jobs before the action."""
+    from neighborly_spark.search_service import SearchService
 
     assert plan_knn_join(10_000_000, 500_000, 64).strategy == "lsh"
     assert plan_knn_join(10_000_000, 500_000, 64, has_hnsw_index=True).strategy == "hnsw"
@@ -268,38 +278,39 @@ def test_big_query_table_prefers_index_tiers(spark):
         spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
         .withColumnRenamed("vec_id", "id")
     )
-    g = hnsw_build(emb, dim=64, num_partitions=2).cache()
-    g.count()
+    svc = SearchService(emb, dim=64)
+    svc.build_index("hnsw")
     queries = emb.limit(10).select(
         F.col("id").alias("qid"), F.col("embedding").alias("qvec")
     )
     sc = spark.sparkContext
     sc.setJobGroup("planner-hnsw-lazy", "")
-    out, plan = knn_join_auto(
-        emb, queries, k=3, dim=64, hnsw_graph=g,
+    out = svc.knn_join(
+        queries, k=3,
         # force the beyond-collect route (counts passed as table stats)
         data_count=10_000_000, query_count=500_000,
         query_id_col="qid", query_vec_col="qvec",
     )
+    plan = svc.last_join_plan
     assert plan.strategy == "hnsw" and "DataFrame" in plan.reason
     assert list(sc.statusTracker().getJobIdsForGroup("planner-hnsw-lazy")) == []
     sc.setJobGroup("planner-hnsw-lazy-done", "")
     rows = out.collect()
     assert {r.qid for r in rows} == {r.qid for r in queries.collect()}
     assert out.columns == ["qid", "id", "dist"]
-    g.unpersist()
 
 
 def test_planner_hnsw_tier_probe_routes_spatial_graphs(spark):
-    """Round-7 VERDICT 1: knn_join_auto's hnsw tier probe-routes SPATIAL
+    """Round-7 VERDICT 1: the planner's hnsw tier probe-routes SPATIAL
     layouts — the shard assignment is |Q| x p rows (not |Q| x shards),
     the routed results clear the recall bar vs the exhaustive fan-out,
-    and hash layouts stay exhaustive by default (routing cannot
-    discriminate uniform shards — docs/RECALL.md round-4 table)."""
+    and hash layouts stay exhaustive (routing cannot discriminate uniform
+    shards — docs/RECALL.md round-4 table)."""
     from unittest import mock
 
     from neighborly_spark.operators import hnsw as H
     from neighborly_spark.plans import knn_planner as P
+    from neighborly_spark.search_service import SearchService
 
     # deterministic 8-component mixture (test_hnsw._clustered recipe)
     import numpy as np
@@ -319,12 +330,20 @@ def test_planner_hnsw_tier_probe_routes_spatial_graphs(spark):
     )
     vec = spark.range(3000).select("id", embc.alias("embedding")).cache()
     vec.count()
-    g = H.hnsw_build(vec, dim=dim, num_partitions=4, spatial=True).cache()
-    g.count()
+
+    def service(spatial):
+        svc = SearchService(vec, dim=dim)
+        # 4 shards (the auto-sizer gives 1 at this row count)
+        with mock.patch.object(H, "hnsw_shard_count", return_value=4):
+            svc.build_index("hnsw", spatial=spatial)
+        return svc
+
+    svc = service(spatial=True)
     queries = vec.orderBy(F.xxhash64("id")).limit(25).select(
         F.col("id").alias("query_id"), F.col("embedding").alias("query_embedding")
     ).cache()
     nq = queries.count()
+    force = dict(k=10, data_count=10_000_000, query_count=500_000)
 
     seen = {}
     real_batch = H.hnsw_search_batch
@@ -334,10 +353,7 @@ def test_planner_hnsw_tier_probe_routes_spatial_graphs(spark):
         return real_batch(graph_df, qdf, k, **kw)
 
     with mock.patch.object(H, "hnsw_search_batch", side_effect=spy):
-        routed, plan = P.knn_join_auto(
-            vec, queries, k=10, dim=dim, hnsw_graph=g, hnsw_spatial=True,
-            data_count=10_000_000, query_count=500_000,
-        )
+        routed = svc.knn_join(queries, **force)
         routed_pairs = {(r.query_id, r.id) for r in routed.collect()}
     # the tier received a routing table + the default probe count
     assert seen["probe_shards"] == P.DEFAULT_PROBE_SHARDS
@@ -353,29 +369,20 @@ def test_planner_hnsw_tier_probe_routes_spatial_graphs(spark):
     assert "MapInPandas" in aplan
     assert "Window" not in aplan and "CartesianProduct" not in aplan
 
-    # recall gate vs the exhaustive path on the same graph
-    exhaustive, plan_ex = P.knn_join_auto(
-        vec, queries, k=10, dim=dim, hnsw_graph=g,
-        data_count=10_000_000, query_count=500_000,
-    )
+    # recall gate vs the exhaustive fan-out over the same graph
+    exhaustive = svc.search_batch(queries, k=10, method="hnsw")
     ex_pairs = {(r.query_id, r.id) for r in exhaustive.collect()}
-    assert plan.strategy == plan_ex.strategy == "hnsw"
+    assert svc.last_join_plan.strategy == "hnsw"
     assert len(routed_pairs) == len(ex_pairs) == nq * 10
     assert len(routed_pairs & ex_pairs) / len(ex_pairs) >= 0.9
 
     # hash layouts stay exhaustive: no routing/probing reaches the tier
-    gh = H.hnsw_build(vec, dim=dim, num_partitions=4).cache()
-    gh.count()
+    svc_h = service(spatial=False)
     seen.clear()
     with mock.patch.object(H, "hnsw_search_batch", side_effect=spy):
-        out_h, _ = P.knn_join_auto(
-            vec, queries, k=10, dim=dim, hnsw_graph=gh,
-            data_count=10_000_000, query_count=500_000,
-        )
-        out_h.collect()
+        svc_h.knn_join(queries, **force).collect()
+    assert svc_h.last_join_plan.strategy == "hnsw"
     assert seen["probe_shards"] is None and seen["routing"] is None
-    gh.unpersist()
-    g.unpersist()
     queries.unpersist()
     vec.unpersist()
 
@@ -421,7 +428,7 @@ def test_service_knn_join_probe_routes_spatial_index(spark):
     emb.unpersist()
 
 
-def test_planner_ivfpq_tier_serves_snapshot_worker_resident(spark):
+def test_planner_ivfpq_tier_serves_snapshot_worker_resident(spark, tmp_path):
     """Round 8: a durable (saved) ivfpq index makes the planner's ivfpq
     tier serve worker-resident (ivfpq_knn_join_snapshot) — the static
     code table never re-ships through the cogroup — with results equal
@@ -429,8 +436,7 @@ def test_planner_ivfpq_tier_serves_snapshot_worker_resident(spark):
     from unittest import mock
 
     from neighborly_spark.operators import ivfpq as IVFPQ_mod
-    from neighborly_spark.operators.ivf import CLUSTER_COL
-    from neighborly_spark.plans import knn_planner as P
+    from neighborly_spark.search_service import SearchService
 
     vec = (
         spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -438,46 +444,39 @@ def test_planner_ivfpq_tier_serves_snapshot_worker_resident(spark):
         .cache()
     )
     vec.count()
-    model = IVFPQ_mod.ivfpq_train(vec, 64, nlist=8, m=8)
-    enc = IVFPQ_mod.ivfpq_encode(vec, model).cache()
-    enc.count()
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="planner_ivfpq_snap_") + "/codes"
-    enc.write.partitionBy(CLUSTER_COL).parquet(path)
+    svc = SearchService(vec, dim=64)
+    svc.build_index("ivfpq")
     queries = vec.limit(6).select(
         F.col("id").alias("query_id"), F.col("embedding").alias("query_embedding")
     )
     # beyond-budget counts force the index tier; no hnsw -> ivfpq wins
-    kw = dict(
-        k=5, dim=64, data_count=10_000_000, query_count=500_000,
-        ivfpq_index=(enc, model),
-    )
-    mem, plan_mem = P.knn_join_auto(vec, queries, **kw)
+    kw = dict(k=5, data_count=10_000_000, query_count=500_000)
+    mem = svc.knn_join(queries, **kw)
+    assert svc.last_join_plan.strategy == "ivfpq"
+    want = sorted((r.query_id, r.id, r.dist) for r in mem.collect())
+    path = str(tmp_path / "svc")
+    svc.save(path)
+    loaded = SearchService.load(spark, path)
+    assert loaded._ivfpq_snapshot is not None
     with mock.patch.object(
         IVFPQ_mod, "ivfpq_knn_join_snapshot", wraps=IVFPQ_mod.ivfpq_knn_join_snapshot
     ) as spy:
-        snap, plan_snap = P.knn_join_auto(
-            vec, queries, ivfpq_snapshot=(path, "v1"), **kw
-        )
+        snap = loaded.knn_join(queries, **kw)
         got = sorted((r.query_id, r.id, r.dist) for r in snap.collect())
-    assert plan_mem.strategy == plan_snap.strategy == "ivfpq"
+    assert loaded.last_join_plan.strategy == "ivfpq"
     assert spy.call_count == 1
-    want = sorted((r.query_id, r.id, r.dist) for r in mem.collect())
     assert got == want and len(got) == 30
-    enc.unpersist()
     vec.unpersist()
 
 
 def test_planner_hnsw_tier_serves_snapshot_worker_resident(spark, tmp_path):
     """Round 8: a durable (saved) hnsw graph makes the planner's hnsw tier
     serve worker-resident (hnsw_search_batch_snapshot) — graph bytes never
-    enter the plan — with results equal to the in-memory route (spatial
-    probe routing composes through both)."""
+    enter the plan — with results equal to the in-memory route."""
     from unittest import mock
 
     from neighborly_spark.operators import hnsw as H
-    from neighborly_spark.plans import knn_planner as P
+    from neighborly_spark.search_service import SearchService
 
     emb = (
         spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -485,43 +484,42 @@ def test_planner_hnsw_tier_serves_snapshot_worker_resident(spark, tmp_path):
         .cache()
     )
     emb.count()
-    g = H.hnsw_build(emb, dim=64, num_partitions=3).cache()
-    g.count()
-    path = str(tmp_path / "graph")
-    g.write.partitionBy("part_id").parquet(path)
-    pids = [r.part_id for r in g.select("part_id").distinct().collect()]
+    svc = SearchService(emb, dim=64)
+    with mock.patch.object(H, "hnsw_shard_count", return_value=3):
+        svc.build_index("hnsw")
     queries = emb.limit(5).select(
         F.col("id").alias("query_id"), F.col("embedding").alias("query_embedding")
     )
-    kw = dict(k=5, dim=64, data_count=10_000_000, query_count=500_000, hnsw_graph=g)
-    mem, plan_mem = P.knn_join_auto(emb, queries, **kw)
+    kw = dict(k=5, data_count=10_000_000, query_count=500_000)
+    mem = svc.knn_join(queries, **kw)
+    assert svc.last_join_plan.strategy == "hnsw"
+    want = sorted((r.query_id, r.id, round(r.dist, 9)) for r in mem.collect())
+    path = str(tmp_path / "svc")
+    svc.save(path)
+    loaded = SearchService.load(spark, path)
+    assert loaded._hnsw_snapshot is not None
     with mock.patch.object(
         H, "hnsw_search_batch_snapshot", wraps=H.hnsw_search_batch_snapshot
     ) as spy:
-        snap, plan_snap = P.knn_join_auto(
-            emb, queries, hnsw_snapshot=(path, "v1", pids), **kw
-        )
+        snap = loaded.knn_join(queries, **kw)
         got = sorted((r.query_id, r.id, round(r.dist, 9)) for r in snap.collect())
-    assert plan_mem.strategy == plan_snap.strategy == "hnsw"
+    assert loaded.last_join_plan.strategy == "hnsw"
     assert spy.call_count == 1
-    want = sorted((r.query_id, r.id, round(r.dist, 9)) for r in mem.collect())
     assert got == want and len(got) == 25
-    g.unpersist()
     emb.unpersist()
 
+
 def test_planner_index_tier_knobs_reach_operators(spark):
-    """Round 9 (r8 VERDICT 5): ivfpq_nprobe / hnsw_ef flow through
-    knn_join_auto into the tier operators — clusterable corpora can probe
-    fewer cells without abandoning the planner. Also: ivfpq_snapshot
-    without ivfpq_index fails loud (the snapshot holds only encoded
-    cells; silently ignoring it would serve a different strategy)."""
+    """Round 9 (r8 VERDICT 5): ivfpq_nprobe / hnsw_ef flow through the
+    planner-routed join into the tier operators — clusterable corpora can
+    probe fewer cells without abandoning the planner."""
     from unittest import mock
 
-    import pytest
+    import numpy as np
 
     from neighborly_spark.operators import hnsw as H
     from neighborly_spark.operators import ivfpq as IVFPQ_mod
-    from neighborly_spark.plans import knn_planner as P
+    from neighborly_spark.search_service import SearchService
 
     vec = (
         spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -532,37 +530,25 @@ def test_planner_index_tier_knobs_reach_operators(spark):
     queries = vec.limit(4).select(
         F.col("id").alias("query_id"), F.col("embedding").alias("query_embedding")
     )
-    force_index = dict(k=3, dim=64, data_count=10_000_000, query_count=500_000)
+    force_index = dict(k=3, data_count=10_000_000, query_count=500_000)
 
-    model = IVFPQ_mod.ivfpq_train(vec, 64, nlist=8, m=8)
-    enc = IVFPQ_mod.ivfpq_encode(vec, model).cache()
-    enc.count()
+    svc = SearchService(vec, dim=64)
+    svc.build_index("ivfpq")
     with mock.patch.object(
         IVFPQ_mod, "ivfpq_knn_join", wraps=IVFPQ_mod.ivfpq_knn_join
     ) as spy:
-        out, plan = P.knn_join_auto(
-            vec, queries, ivfpq_index=(enc, model), ivfpq_nprobe=3, **force_index
-        )
-        rows = out.collect()
-    assert plan.strategy == "ivfpq" and spy.call_args.kwargs["nprobe"] == 3
+        rows = svc.knn_join(queries, ivfpq_nprobe=3, **force_index).collect()
+    assert svc.last_join_plan.strategy == "ivfpq" and spy.call_args.kwargs["nprobe"] == 3
     assert len(rows) == 12
-    # nprobe=3 of 8 cells really is 3 probe assignments per query
-    assigned = IVFPQ_mod._probe_assign(queries, __import__("numpy").asarray(
-        model.ivf.centroids, dtype=float), 3)
-    assert assigned.count() == 4 * 3
+    # nprobe=3 of the model's cells really is 3 probe assignments per query
+    centroids = np.asarray(svc._ivfpq_model.ivf.centroids, dtype=float)
+    assert IVFPQ_mod._probe_assign(queries, centroids, 3).count() == 4 * 3
 
-    g = H.hnsw_build(vec, dim=64, num_partitions=2).cache()
-    g.count()
+    svc = SearchService(vec, dim=64)
+    svc.build_index("hnsw")
     with mock.patch.object(H, "hnsw_search_batch", wraps=H.hnsw_search_batch) as spy:
-        out, plan = P.knn_join_auto(vec, queries, hnsw_graph=g, hnsw_ef=77, **force_index)
-        out.collect()
-    assert plan.strategy == "hnsw" and spy.call_args.kwargs["ef"] == 77
-
-    with pytest.raises(ValueError, match="ivfpq_snapshot requires ivfpq_index"):
-        P.knn_join_auto(vec, queries, ivfpq_snapshot=("/nope", "v1"), **force_index)
-
-    g.unpersist()
-    enc.unpersist()
+        svc.knn_join(queries, hnsw_ef=77, **force_index).collect()
+    assert svc.last_join_plan.strategy == "hnsw" and spy.call_args.kwargs["ef"] == 77
     vec.unpersist()
 
 

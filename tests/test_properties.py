@@ -11,7 +11,7 @@ from __future__ import annotations
 
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from neighborly_spark.functions import distance as D
@@ -480,13 +480,33 @@ def test_rehydrate_arrow_bit_equals_rehydrate(vecs, seed):
     fetch=st.integers(1, 12),
     seed=st.integers(0, 2**31 - 1),
 )
+# a residual close to its codeword: the expansion cancels to a relative
+# distance error of 2.5e-12, inside the bound below
+@example(n=4, nq=7, m=1, kp=6, fetch=1, seed=37452)
 def test_score_sorted_codes_matches_bruteforce_lexsort(n, nq, m, kp, fetch, seed):
     """Law for the shared ADC kernel (_score_sorted_codes — it backs the
     cogroup batch path, the snapshot serving tier, and through them the
     planner's ivfpq route): for ANY code table and query block, the
-    kernel's per-query output is exactly the brute-force ADC distances in
+    kernel's per-query ids are exactly the brute-force ADC distances'
     lexsort((ids, dist))[:fetch] order — including duplicate distances
-    (id tiebreak), duplicate ids, and fetch > n."""
+    (id tiebreak), duplicate ids, and fetch > n — and its squared
+    distances are the brute-force ones within the expansion's
+    forward-error bound.
+
+    The kernel's LUT is the expansion r.r - 2 r.c + c.c (_residual_luts),
+    which cancels when a residual nearly equals its codeword, so no
+    relative tolerance holds. Per code row, with r_s the query residual's
+    and c_s the chosen codeword's s-th sub-vector (sub_dim terms), let
+    A = sum_s (||r_s||^2 + 2 sum_i |r_si c_si| + ||c_s||^2). With
+    u = 2^-53 and gamma_n = n u / (1 - n u), the squared-distance error
+    is at most
+      gamma_{sub_dim+2} A   kernel LUT entries (three sub_dim-term dots
+                            + two adds; the clamp at 0 only helps)
+      + gamma_{m-1} A       kernel sum over the m subspaces
+      + 3u A                sqrt in the kernel, squaring here
+      + gamma_{sub_dim+1} A brute-force direct-form entries sum (r-c)^2
+      + gamma_m A           brute-force sum over the m subspaces
+    <= gamma_{2 sub_dim + 2m + 6} A."""
     import numpy as np
 
     from neighborly_spark.operators.ivfpq import _score_sorted_codes
@@ -510,12 +530,18 @@ def test_score_sorted_codes_matches_bruteforce_lexsort(n, nq, m, kp, fetch, seed
         qids, qv, cell, ids_s, idx_s, fetch, coarse, books, m, sub_dim, kp, "id"
     )
 
-    # brute force: per query, ADC distance of every row, lexsort((ids, d))
+    u = 2.0**-53
+    nu = (2 * sub_dim + 2 * m + 6) * u
+    gamma = nu / (1 - nu)
+    cw = books[np.arange(m)[None, :], codes]  # (n, m, sub_dim) chosen codewords
+    # brute force: per query, ADC squared distance of every row, lexsort((ids, d2))
     for qi in range(nq):
         res = (qv[qi] - coarse[cell]).reshape(m, sub_dim)
         lut = ((res[:, None, :] - books) ** 2).sum(-1)  # (m, kp)
-        d = np.sqrt(np.array([sum(lut[s, codes[r, s]] for s in range(m)) for r in range(n)]))
-        order = np.lexsort((ids, d))[:fetch]
+        d2 = np.array([sum(lut[s, codes[r, s]] for s in range(m)) for r in range(n)])
+        mag = ((res**2)[None] + 2 * np.abs(res[None] * cw) + cw**2).sum(axis=(1, 2))
+        order = np.lexsort((ids, d2))[:fetch]
         sub = got[got["query_id"] == qids[qi]]
         assert list(sub["id"]) == [int(ids[r]) for r in order]
-        np.testing.assert_allclose(list(sub["dist"]), d[order], rtol=1e-12)
+        err = np.abs(np.asarray(sub["dist"]) ** 2 - d2[order])
+        assert (err <= gamma * mag[order]).all(), (err, gamma * mag[order])
