@@ -778,7 +778,7 @@ def _force(df) -> None:
 #   (b) every entry whose in-bench time exceeds ADJUDICATE_FACTOR x its
 #       prior record (BENCH_BASELINE.json — updated each round from quiet
 #       dedicated measurements) is automatically RE-MEASURED in a fresh
-#       subprocess SparkSession (the scripts/bench_dedicated.py method
+#       subprocess SparkSession (bench.py --dedicated-entry, the method
 #       that settled every past adjudication) and the result stamped into
 #       an `adjudications` field, so code-vs-environment is readable from
 #       the shipped file alone.

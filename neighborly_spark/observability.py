@@ -97,13 +97,17 @@ def sql_metrics(df) -> dict:
     {node -> {metric -> value}}. The Spark-native observability surface —
     numOutputRows per operator, files/bytes read per scan — read through
     py4j by a recursive plan walk (descending into the AQE wrapper's
-    current physical plan), no listener registration required."""
+    current physical plan and into the plan each query stage wraps — a
+    stage node reports no metrics and lists no children), no listener
+    registration required."""
     out: dict = {}
 
     def visit(node) -> None:
-        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            visit(node.executedPlan())
-            return
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return visit(node.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return visit(node.plan())
         m = node.metrics()
         keys = m.keys().iterator()
         metrics = {}

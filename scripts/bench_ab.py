@@ -1,10 +1,11 @@
 """Interleaved dedicated A/B of ONE bench entry between two repo roots
 (e.g. HEAD vs a prior-round worktree), alternating legs A,B,A,B,... so
-host drift hits both legs equally. Each leg runs in a FRESH subprocess
-with cwd *and* PYTHONPATH pointing at its root — python workers resolve
-`neighborly_spark` via cwd/PYTHONPATH, not the driver's sys.path, so a
-naive sys.path A/B silently times the wrong worker-side code (round-11
-finding).
+host drift hits both legs equally. Each leg runs
+``<root>/bench.py --dedicated-entry <entry>`` (the bench's own per-entry
+timing protocol) in a FRESH subprocess with cwd *and* PYTHONPATH pointing
+at its root — python workers resolve `neighborly_spark` via
+cwd/PYTHONPATH, not the driver's sys.path, so a naive sys.path A/B
+silently times the wrong worker-side code (round-11 finding).
 
 Usage:
   python scripts/bench_ab.py <entry> <rootA> <rootB> [pairs=2]
@@ -25,8 +26,7 @@ def run_leg(entry: str, root: str) -> dict:
     env["PYTHONPATH"] = root
     env.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out = subprocess.run(
-        [sys.executable, os.path.join(root, "scripts", "bench_dedicated.py"),
-         entry, root],
+        [sys.executable, os.path.join(root, "bench.py"), "--dedicated-entry", entry],
         cwd=root, env=env, capture_output=True, text=True, timeout=3600,
     )
     line = out.stdout.strip().splitlines()[-1]

@@ -269,29 +269,45 @@ def test_cosine_ann_via_normalization(spark, emb, query):
 def test_search_service_save_load_roundtrip(spark, emb, query, tmp_path):
     """Snapshot story: build every index, save, load — the restored
     service serves every method with the SAME results and no re-training
-    (the artifacts, not the data, answer)."""
+    (the artifacts, not the data, answer), reports the same index_stats,
+    and keeps serving identically through an append + remove."""
+    methods = ("linear", "lsh", "bq", "pq", "ivf", "sq", "ivfpq", "hnsw")
+
+    def results(s):
+        return {
+            m: [(r.id, round(r.dist, 6)) for r in s.search(query_vec=query, k=5, method=m).collect()]
+            for m in methods
+        }
+
+    def stats(s):
+        return [{k: v for k, v in d.items() if k != "snapshot_backed"} for d in s.index_stats()]
+
     svc = SearchService(emb, dim=64)
     svc.build_all_indexes()
-    before = {
-        m: [(r.id, round(r.dist, 6)) for r in svc.search(query_vec=query, k=5, method=m).collect()]
-        for m in ("linear", "lsh", "bq", "pq", "ivf", "sq", "ivfpq")
-    }
+    before = results(svc)
     svc.save(str(tmp_path / "db"))
 
     loaded = SearchService.load(spark, str(tmp_path / "db"))
-    after = {
-        m: [(r.id, round(r.dist, 6)) for r in loaded.search(query_vec=query, k=5, method=m).collect()]
-        for m in ("linear", "lsh", "bq", "pq", "ivf", "sq", "ivfpq")
-    }
+    after = results(loaded)
     assert after == before
+    assert stats(loaded) == stats(svc)
     # the loaded service answers from artifacts: models restored, not refit
-    assert loaded._bq_threshold == svc._bq_threshold
-    assert loaded._pq_model.centroids == svc._pq_model.centroids
-    assert loaded._ivf_model.centroids == svc._ivf_model.centroids
-    assert loaded._sq_model.vmin == svc._sq_model.vmin
-    assert loaded._sq_model.vmax == svc._sq_model.vmax
-    assert loaded._ivfpq_model.ivf.centroids == svc._ivfpq_model.ivf.centroids
-    assert loaded._ivfpq_model.pq.centroids == svc._ivfpq_model.pq.centroids
+    assert loaded._indexes["bq"].model == svc._indexes["bq"].model
+    assert loaded._indexes["pq"].model.centroids == svc._indexes["pq"].model.centroids
+    assert loaded._indexes["ivf"].model.centroids == svc._indexes["ivf"].model.centroids
+    assert loaded._indexes["sq"].model.vmin == svc._indexes["sq"].model.vmin
+    assert loaded._indexes["sq"].model.vmax == svc._indexes["sq"].model.vmax
+    assert loaded._indexes["ivfpq"].model.ivf.centroids == svc._indexes["ivfpq"].model.ivf.centroids
+    assert loaded._indexes["ivfpq"].model.pq.centroids == svc._indexes["ivfpq"].model.pq.centroids
+
+    # the same mutations on both: appended rows encode against the same
+    # restored models, so every method keeps answering identically
+    new = emb.filter(F.col("id") < 5).withColumn("id", F.col("id") + 700000)
+    for s in (svc, loaded):
+        s.add_vectors(new)
+        s.remove_vectors([7, 700001])
+    assert results(loaded) == results(svc)
+    assert stats(loaded) == stats(svc)
 
 
 def test_incremental_quantizer_append(spark, emb, query):
@@ -306,23 +322,22 @@ def test_incremental_quantizer_append(spark, emb, query):
     for m in ("lsh", "bq", "pq", "ivf", "sq", "ivfpq"):
         svc.build_index(m)
     thr, ivf_model, pq_model, lsh_model, sq_model, ivfpq_model = (
-        svc._bq_threshold, svc._ivf_model, svc._pq_model, svc._lsh_model,
-        svc._sq_model, svc._ivfpq_model,
+        svc._indexes[m].model for m in ("bq", "ivf", "pq", "lsh", "sq", "ivfpq")
     )
     svc.add_vectors(new)
     # models untouched (append path, not retrain)
-    assert svc._bq_threshold == thr
-    assert svc._ivf_model is ivf_model
-    assert svc._pq_model is pq_model
-    assert svc._lsh_model is lsh_model
-    assert svc._sq_model is sq_model
-    assert svc._ivfpq_model is ivfpq_model
+    assert svc._indexes["bq"].model == thr
+    assert svc._indexes["ivf"].model is ivf_model
+    assert svc._indexes["pq"].model is pq_model
+    assert svc._indexes["lsh"].model is lsh_model
+    assert svc._indexes["sq"].model is sq_model
+    assert svc._indexes["ivfpq"].model is ivfpq_model
     # code/assignment tables cover the union
-    assert svc._bq_codes.count() == emb.count()
-    assert svc._ivf_assigned.count() == emb.count()
-    assert svc._pq_encoded.count() == emb.count()
-    assert svc._sq_codes.count() == emb.count()
-    assert svc._ivfpq_encoded.count() == emb.count()
+    assert svc._indexes["bq"].artifact.count() == emb.count()
+    assert svc._indexes["ivf"].artifact.count() == emb.count()
+    assert svc._indexes["pq"].artifact.count() == emb.count()
+    assert svc._indexes["sq"].artifact.count() == emb.count()
+    assert svc._indexes["ivfpq"].artifact.count() == emb.count()
 
     # served results == one-shot encode of the union with the SAME models
     union = old.unionByName(new)
@@ -383,12 +398,12 @@ def test_incremental_quantizer_append(spark, emb, query):
     # removal filters the artifact tables, models stay
     victim = int(new.first().id)
     svc.remove_vectors([victim])
-    assert svc._bq_codes.filter(F.col("id") == victim).count() == 0
-    assert svc._ivf_assigned.filter(F.col("id") == victim).count() == 0
-    assert svc._pq_encoded.filter(F.col("id") == victim).count() == 0
-    assert svc._sq_codes.filter(F.col("id") == victim).count() == 0
-    assert svc._ivfpq_encoded.filter(F.col("id") == victim).count() == 0
-    assert svc._bq_threshold == thr and svc._ivf_model is ivf_model
+    assert svc._indexes["bq"].artifact.filter(F.col("id") == victim).count() == 0
+    assert svc._indexes["ivf"].artifact.filter(F.col("id") == victim).count() == 0
+    assert svc._indexes["pq"].artifact.filter(F.col("id") == victim).count() == 0
+    assert svc._indexes["sq"].artifact.filter(F.col("id") == victim).count() == 0
+    assert svc._indexes["ivfpq"].artifact.filter(F.col("id") == victim).count() == 0
+    assert svc._indexes["bq"].model == thr and svc._indexes["ivf"].model is ivf_model
 
 
 def test_cosine_neardup_approx_vs_exact(spark):
@@ -556,15 +571,15 @@ def test_tag_filtered_search_across_index_methods(spark, emb, query):
     assert got <= both and 7 in got
 
     # artifacts embed the tags column -> filtered plans carry no extra join
-    assert "tags" in svc._sq_codes.columns
-    assert "tags" in svc._bq_codes.columns
-    assert "tags" in svc._ivfpq_encoded.columns
+    assert "tags" in svc._indexes["sq"].artifact.columns
+    assert "tags" in svc._indexes["bq"].artifact.columns
+    assert "tags" in svc._indexes["ivfpq"].artifact.columns
 
     # hnsw graph path (round-6): tags are embedded in the graph artifact
     # and the filtered descent returns only allowed rows, finding the
     # allowed query row itself
     svc.build_index("hnsw")
-    assert "tags" in svc._hnsw_graph.columns
+    assert "tags" in svc._indexes["hnsw"].artifact.columns
     got = [r.id for r in svc.search(query_vec=query, k=5, method="hnsw", tag_any=[1]).collect()]
     assert set(got) <= allowed and 7 in got
 
@@ -573,7 +588,7 @@ def test_tag_filtered_search_across_index_methods(spark, emb, query):
     # new one (new id 900001 copies ORIGINAL id 1's tags [1, 4])
     new = tagged.filter(F.col("id") < 3).withColumn("id", F.col("id") + 900000)
     svc.add_vectors(new)
-    assert svc._sq_codes.filter(
+    assert svc._indexes["sq"].artifact.filter(
         (F.col("id") == 900001) & F.array_contains("tags", 1)
     ).count() == 1
     got = {r.id for r in svc.search(
@@ -648,17 +663,17 @@ def test_shared_coarse_quantizer(spark, emb, tmp_path):
     svc.build_index("ivf")
     svc.build_index("ivfpq")
     # literally the same object — one fit, consistent probe semantics
-    assert svc._ivfpq_model.ivf is svc._ivf_model
+    assert svc._indexes["ivfpq"].model.ivf is svc._indexes["ivf"].model
     svc.build_index("hnsw", spatial=True)
-    assert svc._hnsw_shards in svc._coarse_models  # spatial layout reused it
+    assert svc._indexes["hnsw"].shards in svc._coarse_models  # spatial layout reused it
 
     # a new table version invalidates the memo; rebuild trains fresh
-    old = svc._ivf_model
+    old = svc._indexes["ivf"].model
     svc.add_vectors(emb.limit(3).withColumn("id", F.col("id") + 500000))
     assert svc._coarse_models == {}
-    assert svc._ivf_model is old  # built index keeps serving (Q13)
+    assert svc._indexes["ivf"].model is old  # built index keeps serving (Q13)
     svc.build_index("ivf")
-    assert svc._ivf_model is not old
+    assert svc._indexes["ivf"].model is not old
 
     # snapshot round-trip: loaded service shares the restored coarse model
     svc2 = SearchService(emb, dim=64)
@@ -667,17 +682,17 @@ def test_shared_coarse_quantizer(spark, emb, tmp_path):
     path = str(tmp_path / "snap_coarse")
     svc2.save(path)
     loaded = SearchService.load(spark, path)
-    assert loaded._ivfpq_model.ivf is loaded._ivf_model
-    assert loaded._coarse_models[16] is loaded._ivf_model
+    assert loaded._indexes["ivfpq"].model.ivf is loaded._indexes["ivf"].model
+    assert loaded._coarse_models[16] is loaded._indexes["ivf"].model
     q = list(emb.first().embedding)
     assert loaded.search(query_vec=q, k=3, method="ivfpq").count() == 3
 
 
-def test_range_search_sq_tier_and_lossless_gating(spark, emb):
+def test_range_search_sq_tier_and_lossless_gating(spark, emb, tmp_path):
     """range_search(method='sq'): identical rows to the exact scan while
     the lossless precondition holds; an out-of-range append voids the
     bound and the service silently serves the exact scan instead (still
-    correct — including the appended rows)."""
+    correct — including the appended rows), also after a save/load."""
     svc = SearchService(emb, dim=64)
     q = list(emb.first().embedding)
     exact = [(r.id, round(r.dist, 9)) for r in svc.range_search(query_vec=q, radius=2.0).collect()]
@@ -696,6 +711,15 @@ def test_range_search_sq_tier_and_lossless_gating(spark, emb):
     probe = list(shifted.select("embedding").collect()[0].embedding)
     got = {r.id for r in svc.range_search(query_vec=probe, radius=0.5, method="sq").collect()}
     assert 910000 in got  # the quantized prefilter would have lost it
+
+    # the voided bound is index state: it survives save/load
+    svc.save(str(tmp_path / "sq"))
+    loaded = SearchService.load(spark, str(tmp_path / "sq"))
+    stats = {s["index"]: s for s in loaded.index_stats()}
+    assert stats["sq"]["sq_lossless"] is False
+    assert stats["sq"]["appended_rows"] == 1
+    got = {r.id for r in loaded.range_search(query_vec=probe, radius=0.5, method="sq").collect()}
+    assert 910000 in got
 
 
 def test_search_batch_nonfinite_df_raises(spark, emb):

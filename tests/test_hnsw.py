@@ -131,10 +131,10 @@ def test_snapshot_serving_tier(spark, emb, tmp_path):
     svc.save(path)
 
     loaded = SearchService.load(spark, path)
-    assert loaded._hnsw_snapshot is not None
-    pth, ver, pids = loaded._hnsw_snapshot
+    assert loaded._indexes["hnsw"].snapshot is not None
+    pth, ver, pids = loaded._indexes["hnsw"].snapshot
     assert sorted(pids) == sorted(
-        r.part_id for r in svc._hnsw_graph.select("part_id").distinct().collect()
+        r.part_id for r in svc._indexes["hnsw"].artifact.select("part_id").distinct().collect()
     )
     got = [(r.id, round(r.dist, 9)) for r in loaded.search(query_vec=q, k=5, method="hnsw").collect()]
     assert got == want
@@ -156,7 +156,7 @@ def test_snapshot_serving_tier(spark, emb, tmp_path):
     )
     b = sorted(
         (r.query_id, r.id, round(r.dist, 9))
-        for r in hnsw_search_batch(loaded._hnsw_graph, qs, 5).collect()
+        for r in hnsw_search_batch(loaded._indexes["hnsw"].artifact, qs, 5).collect()
     )
     assert a == b
 
@@ -167,7 +167,7 @@ def test_snapshot_serving_tier(spark, emb, tmp_path):
     # mutation invalidates: adds serve from the updated in-memory graph
     new = emb.limit(2).withColumn("id", F.col("id") + 880000)
     loaded.add_vectors(new)
-    assert loaded._hnsw_snapshot is None
+    assert loaded._indexes["hnsw"].snapshot is None
     # the new row copies an existing row's vector, so BOTH rank at 0.0
     probe = list(new.first().embedding)
     hits = loaded.search(query_vec=probe, k=2, method="hnsw").collect()
@@ -190,7 +190,7 @@ def test_snapshot_serving_with_probe_routing(spark, tmp_path):
     path = str(tmp_path / "snap_spatial")
     svc.save(path)
     loaded = SearchService.load(spark, path)
-    assert loaded._hnsw_snapshot is not None and loaded._hnsw_spatial
+    assert loaded._indexes["hnsw"].snapshot is not None and loaded._indexes["hnsw"].spatial
     got = [(r.id, round(r.dist, 9)) for r in loaded.search(
         query_vec=q, k=5, method="hnsw", hnsw_probe_shards=2).collect()]
     assert got == want
@@ -248,7 +248,7 @@ def test_service_add_vectors_incremental(spark, emb):
     svc = SearchService(old, dim=64)
     svc.build_index("hnsw")
     svc.add_vectors(emb.filter(F.col("id") % 2 == 1))
-    assert svc._hnsw_graph.count() == emb.count()
+    assert svc._indexes["hnsw"].artifact.count() == emb.count()
     q = list(emb.filter(F.col("id") % 2 == 1).first().embedding)
     got = svc.search(query_vec=q, k=3, method="hnsw").collect()
     assert got[0].dist == 0.0  # the newly added vector finds itself
@@ -310,7 +310,7 @@ def test_service_remove_vectors(spark, emb):
     svc.build_index("hnsw")
     victim = emb.first()
     svc.remove_vectors([victim.id])
-    assert svc._hnsw_graph.filter(F.col("id") == victim.id).count() == 0
+    assert svc._indexes["hnsw"].artifact.filter(F.col("id") == victim.id).count() == 0
     got = svc.search(query_vec=list(victim.embedding), k=3, method="hnsw").collect()
     assert victim.id not in {r.id for r in got} and len(got) == 3
 
@@ -824,10 +824,10 @@ def test_snapshot_tag_filtered_worker_resident(spark, tmp_path):
     ]
     path = str(tmp_path / "snap_tags")
     svc.save(path)
-    assert svc._hnsw_snapshot is not None  # save() backs the live service
+    assert svc._indexes["hnsw"].snapshot is not None  # save() backs the live service
 
     loaded = SearchService.load(spark, path)
-    pth, ver, pids = loaded._hnsw_snapshot
+    pth, ver, pids = loaded._indexes["hnsw"].snapshot
     hits = total = 0
     for q, w in zip(qs, want):
         got = [(r.id, round(r.dist, 9)) for r in loaded.search(
@@ -930,7 +930,7 @@ def test_snapshot_probe_routing_composes_with_tags(spark, tmp_path):
     path = str(tmp_path / "snap_probe_tags")
     svc.save(path)
     loaded = SearchService.load(spark, path)
-    assert loaded._hnsw_snapshot is not None
+    assert loaded._indexes["hnsw"].snapshot is not None
     got = [(r.id, round(r.dist, 9)) for r in loaded.search(
         query_vec=q, k=5, method="hnsw", hnsw_probe_shards=2, tag_any=[1]
     ).collect()]
@@ -1223,7 +1223,7 @@ def test_sq8_snapshot_artifacts(spark, emb, tmp_path):
     pf, p8 = str(tmp_path / "snap_float"), str(tmp_path / "snap_sq8")
     svc.save(pf)
     svc.save(p8, hnsw_sq8=True)
-    assert svc._hnsw_sq8 is not None  # the fresh sq8 snapshot backs the service
+    assert svc._indexes["hnsw"].sq8 is not None  # the fresh sq8 snapshot backs the service
 
     def dir_bytes(d):
         return sum(
@@ -1237,9 +1237,9 @@ def test_sq8_snapshot_artifacts(spark, emb, tmp_path):
 
     loaded_f = SearchService.load(spark, pf)
     loaded_8 = SearchService.load(spark, p8)
-    assert loaded_8._hnsw_sq8 is not None and loaded_8._hnsw_snapshot is not None
-    assert "embedding" in loaded_8._hnsw_graph.columns  # decoded view
-    assert "embedding_sq8" not in loaded_8._hnsw_graph.columns
+    assert loaded_8._indexes["hnsw"].sq8 is not None and loaded_8._indexes["hnsw"].snapshot is not None
+    assert "embedding" in loaded_8._indexes["hnsw"].artifact.columns  # decoded view
+    assert "embedding_sq8" not in loaded_8._indexes["hnsw"].artifact.columns
 
     queries = [
         (i, list(r.embedding))
@@ -1248,9 +1248,9 @@ def test_sq8_snapshot_artifacts(spark, emb, tmp_path):
     exact = {i: {r.id for r in knn(emb, q, 10).collect()} for i, q in queries}
 
     def recall(loaded):
-        pth, ver, pids = loaded._hnsw_snapshot
+        pth, ver, pids = loaded._indexes["hnsw"].snapshot
         out = hnsw_search_batch_snapshot(
-            spark, pth, pids, queries, 10, version=ver, sq8=loaded._hnsw_sq8
+            spark, pth, pids, queries, 10, version=ver, sq8=loaded._indexes["hnsw"].sq8
         )
         by_q = {}
         for r in out.collect():
@@ -1269,7 +1269,7 @@ def test_sq8_snapshot_artifacts(spark, emb, tmp_path):
 
     # an sq8 artifact without its params must fail loudly (fresh version
     # string defeats the worker LRU so the load actually happens)
-    pth, ver, pids = loaded_8._hnsw_snapshot
+    pth, ver, pids = loaded_8._indexes["hnsw"].snapshot
     with pytest.raises(Exception, match="sq8"):
         hnsw_search_batch_snapshot(
             spark, pth, pids, queries[:1], 5, version=ver + "nosq8"
@@ -1278,7 +1278,7 @@ def test_sq8_snapshot_artifacts(spark, emb, tmp_path):
     # mutation drops to the decoded in-memory graph and still answers
     new = emb.limit(1).withColumn("id", F.col("id") + 990000)
     loaded_8.add_vectors(new)
-    assert loaded_8._hnsw_snapshot is None and loaded_8._hnsw_sq8 is None
+    assert loaded_8._indexes["hnsw"].snapshot is None and loaded_8._indexes["hnsw"].sq8 is None
     probe = list(new.first().embedding)
     hits = loaded_8.search(query_vec=probe, k=2, method="hnsw").collect()
     assert any(r.id == int(new.first().id) for r in hits)

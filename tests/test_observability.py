@@ -42,6 +42,18 @@ def test_sql_metrics_reads_executed_plan(spark):
     assert any(r is not None and int(r) >= 100 for r in rows)
 
 
+def test_sql_metrics_descends_into_aqe_query_stages(spark):
+    """A shuffle puts the executed plan behind AQE query stages
+    (AdaptiveSparkPlanExec -> ResultQueryStageExec -> ...); the stage
+    nodes report no metrics themselves, so the walk must enter the plan
+    each stage wraps."""
+    df = spark.range(20000).repartition(4).filter(F.col("id") % 3 == 0)
+    df.collect()
+    metrics = sql_metrics(df)
+    rows = [v.get("numOutputRows") for v in metrics.values()]
+    assert any(r is not None and int(r) > 0 for r in rows)
+
+
 def test_worker_cache_stats_probe(spark):
     """The ops probe reaches the python workers and reports the shared
     cache's shape (round 9 — the sizing dashboard for NB_WORKER_CACHE_MB)."""

@@ -457,7 +457,7 @@ def test_planner_ivfpq_tier_serves_snapshot_worker_resident(spark, tmp_path):
     path = str(tmp_path / "svc")
     svc.save(path)
     loaded = SearchService.load(spark, path)
-    assert loaded._ivfpq_snapshot is not None
+    assert loaded._indexes["ivfpq"].snapshot is not None
     with mock.patch.object(
         IVFPQ_mod, "ivfpq_knn_join_snapshot", wraps=IVFPQ_mod.ivfpq_knn_join_snapshot
     ) as spy:
@@ -497,7 +497,7 @@ def test_planner_hnsw_tier_serves_snapshot_worker_resident(spark, tmp_path):
     path = str(tmp_path / "svc")
     svc.save(path)
     loaded = SearchService.load(spark, path)
-    assert loaded._hnsw_snapshot is not None
+    assert loaded._indexes["hnsw"].snapshot is not None
     with mock.patch.object(
         H, "hnsw_search_batch_snapshot", wraps=H.hnsw_search_batch_snapshot
     ) as spy:
@@ -541,7 +541,7 @@ def test_planner_index_tier_knobs_reach_operators(spark):
     assert svc.last_join_plan.strategy == "ivfpq" and spy.call_args.kwargs["nprobe"] == 3
     assert len(rows) == 12
     # nprobe=3 of the model's cells really is 3 probe assignments per query
-    centroids = np.asarray(svc._ivfpq_model.ivf.centroids, dtype=float)
+    centroids = np.asarray(svc._indexes["ivfpq"].model.ivf.centroids, dtype=float)
     assert IVFPQ_mod._probe_assign(queries, centroids, 3).count() == 4 * 3
 
     svc = SearchService(vec, dim=64)

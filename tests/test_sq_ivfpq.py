@@ -539,7 +539,7 @@ def test_cosine_metric_matrix_quantized_tiers(spark, emb):
     svc = SearchService(emb, dim=64)
     for method in ("sq", "ivfpq", "bq"):
         svc.build_index(method, metric="cosine")
-    assert svc._index_metric["sq"] == "cosine"
+    assert svc._indexes["sq"].metric == "cosine"
 
     # sq: near-lossless -> top-k ids equal the exact cosine oracle
     got = [(r.id, float(r.dist)) for r in svc.search(
@@ -579,7 +579,7 @@ def test_cosine_metric_matrix_quantized_tiers(spark, emb):
     got = [(r.id, float(r.dist)) for r in svc_h.search(
         query_vec=q, k=K, method="hnsw", metric="cosine"
     ).collect()]
-    assert svc_h._index_metric["hnsw"] == "cosine"
+    assert svc_h._indexes["hnsw"].metric == "cosine"
     assert _recall([i for i, _ in got], exact_ids) >= 0.8
     for rid, sim in got:
         if rid in exact_sim:
@@ -688,7 +688,7 @@ def test_cosine_index_snapshot_roundtrip(spark, emb, tmp_path):
     path = str(tmp_path / "snap_cos")
     svc.save(path)
     loaded = SearchService.load(spark, path)
-    assert loaded._index_metric.get("sq") == "cosine"
+    assert loaded._indexes["sq"].metric == "cosine"
     got = [(r.id, round(r.dist, 9)) for r in loaded.search(
         query_vec=q, k=5, method="sq", metric="cosine").collect()]
     assert got == want
@@ -824,7 +824,7 @@ def test_sq_range_search_cosine_equals_exact(spark, emb, query):
         [(990001, [100.0] + [0.0] * 63)], "id long, embedding array<float>"
     )
     svc.add_vectors(out_of_range)
-    assert svc._sq_drift["out_of_range_rows"] > 0
+    assert svc._indexes["sq"].drift["out_of_range_rows"] > 0
     exact2 = {
         (r.id, round(r.dist, 9))
         for r in range_search(svc.df, query, 0.3, metric="cosine").collect()
@@ -1020,16 +1020,16 @@ def test_search_service_ivfpq_snapshot_roundtrip(spark, emb, tmp_path):
         (r.query_id, r.id, r.dist)
         for r in svc.search_batch(qdf, k=K, method="ivfpq").collect()
     )
-    assert svc._ivfpq_snapshot is None
+    assert svc._indexes["ivfpq"].snapshot is None
     svc.save(str(tmp_path / "snap"))
-    assert svc._ivfpq_snapshot is not None
+    assert svc._indexes["ivfpq"].snapshot is not None
     after_save = sorted(
         (r.query_id, r.id, r.dist)
         for r in svc.search_batch(qdf, k=K, method="ivfpq").collect()
     )
     assert after_save == before
     loaded = SearchService.load(spark, str(tmp_path / "snap"))
-    assert loaded._ivfpq_snapshot is not None
+    assert loaded._indexes["ivfpq"].snapshot is not None
     after_load = sorted(
         (r.query_id, r.id, r.dist)
         for r in loaded.search_batch(qdf, k=K, method="ivfpq").collect()
@@ -1050,10 +1050,10 @@ def test_search_service_ivfpq_snapshot_roundtrip(spark, emb, tmp_path):
     want_filtered = sorted(
         (r.query_id, r.id, r.dist)
         for r in IVFPQ.ivfpq_knn_join(
-            loaded._ivfpq_encoded.filter(
+            loaded._indexes["ivfpq"].artifact.filter(
                 F.arrays_overlap(F.col("tags"), F.lit([1]).cast("array<smallint>"))
             ),
-            loaded._ivfpq_model, qdf, 5, nprobe=10, df=tagged.filter("id % 2 = 1"),
+            loaded._indexes["ivfpq"].model, qdf, 5, nprobe=10, df=tagged.filter("id % 2 = 1"),
         ).collect()
     )
     assert sorted((r.query_id, r.id, r.dist) for r in filtered) == want_filtered
@@ -1062,7 +1062,7 @@ def test_search_service_ivfpq_snapshot_roundtrip(spark, emb, tmp_path):
         (F.col("id") + 1_000_000).alias("id"), *[c for c in tagged.columns if c != "id"]
     )
     loaded.add_vectors(new_row)
-    assert loaded._ivfpq_snapshot is None
+    assert loaded._indexes["ivfpq"].snapshot is None
     tagged.unpersist()
 
 
@@ -1352,14 +1352,14 @@ def test_opq_paths_agree_and_roundtrip(spark, tmp_path):
     # service integration + snapshot persistence of the rotation
     svc = SearchService(df, dim=16)
     svc.build_index("ivfpq", opq=True)
-    assert svc._ivfpq_model.rotation is not None
+    assert svc._indexes["ivfpq"].model.rotation is not None
     before = sorted(
         (r.query_id, r.id, r.dist)
         for r in svc.search_batch(qrows, k=5, method="ivfpq").collect()
     )
     svc.save(str(tmp_path / "svc_snap"))
     loaded = SearchService.load(spark, str(tmp_path / "svc_snap"))
-    assert loaded._ivfpq_model.rotation is not None
+    assert loaded._indexes["ivfpq"].model.rotation is not None
     after = sorted(
         (r.query_id, r.id, r.dist)
         for r in loaded.search_batch(qrows, k=5, method="ivfpq").collect()
@@ -1385,7 +1385,7 @@ def test_opq_composes_with_cosine_builds(spark):
     emb.count()
     svc = SearchService(emb, dim=16)
     svc.build_index("ivfpq", metric="cosine", opq=True)
-    assert svc._ivfpq_model.rotation is not None
+    assert svc._indexes["ivfpq"].model.rotation is not None
     qdf = emb.limit(8).select(
         F.col("id").alias("query_id"),
         F.col("embedding").cast("array<double>").alias("query_embedding"),
@@ -1563,7 +1563,7 @@ def test_flat_pq_opq_no_harm_rerank_and_service_roundtrip(spark, tmp_path):
 
     svc = SearchService(df, dim=16)
     svc.build_index("pq", opq=True)
-    assert svc._pq_model.rotation is not None
+    assert svc._indexes["pq"].model.rotation is not None
     qid0, q0 = queries[0]
     want = [
         (r.id, round(r.dist, 9))
@@ -1573,7 +1573,7 @@ def test_flat_pq_opq_no_harm_rerank_and_service_roundtrip(spark, tmp_path):
     path = str(tmp_path / "pq_opq_svc")
     svc.save(path)
     loaded = SearchService.load(spark, path)
-    assert loaded._pq_model.rotation == svc._pq_model.rotation
+    assert loaded._indexes["pq"].model.rotation == svc._indexes["pq"].model.rotation
     got = [
         (r.id, round(r.dist, 9))
         for r in loaded.search(query_vec=q0, k=5, method="pq").collect()

@@ -289,7 +289,7 @@ def test_stream_ingest_incremental_hnsw(spark, events_landing, tmp_path):
         on_batch=svc.add_vectors,
     )
     q.awaitTermination(120)
-    assert svc._hnsw_graph.count() == 1000
+    assert svc._indexes["hnsw"].artifact.count() == 1000
     probe = svc.df.limit(1).collect()[0]
     got = svc.search(query_vec=list(probe.embedding), k=3, method="hnsw").collect()
     assert got[0].dist == 0.0
@@ -318,7 +318,7 @@ def test_stream_ingest_incremental_quantizers(spark, events_landing, tmp_path):
     svc = SearchService(base, dim=8)
     for m in ("bq", "sq", "ivfpq"):
         svc.build_index(m)
-    models = (svc._bq_threshold, svc._sq_model, svc._ivfpq_model)
+    models = (svc._indexes["bq"].model, svc._indexes["sq"].model, svc._indexes["ivfpq"].model)
     q = start_ingest(
         spark,
         events_landing,
@@ -330,10 +330,10 @@ def test_stream_ingest_incremental_quantizers(spark, events_landing, tmp_path):
     )
     q.awaitTermination(120)
     # artifacts cover base + ingested rows; models untouched (append path)
-    assert svc._sq_codes.count() == 1050
-    assert svc._ivfpq_encoded.count() == 1050
-    assert svc._bq_codes.count() == 1050
-    assert (svc._bq_threshold, svc._sq_model, svc._ivfpq_model) == models
+    assert svc._indexes["sq"].artifact.count() == 1050
+    assert svc._indexes["ivfpq"].artifact.count() == 1050
+    assert svc._indexes["bq"].artifact.count() == 1050
+    assert (svc._indexes["bq"].model, svc._indexes["sq"].model, svc._indexes["ivfpq"].model) == models
     probe = svc.df.filter(F.col("id").startswith("base-") == False).limit(1).collect()[0]  # noqa: E712
     # sq default (r6) is the pure dequantized tier: the self-query ranks
     # first but its reported distance is the quantized one (~decode eps),

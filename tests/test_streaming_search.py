@@ -182,7 +182,7 @@ def test_query_stream_serves_ivfpq_snapshot_tier(spark, emb, tmp_path):
     svc = SearchService(emb, dim=64)
     svc.build_index("ivfpq")
     svc.save(str(tmp_path / "snap"))
-    assert svc._ivfpq_snapshot is not None
+    assert svc._indexes["ivfpq"].snapshot is not None
 
     qdir = str(tmp_path / "q_in")
     emb.limit(4).select(
