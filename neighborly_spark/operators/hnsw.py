@@ -24,9 +24,10 @@ Spark-first architecture (the Lucene/Elasticsearch segment-graph shape):
   DataFrame artifact `(part_id, id, level, embedding, neighbors)` with
   `neighbors[l]` = adjacency at layer l — persistable as parquet (S9), no
   driver-side state.
-- SEARCH (`hnsw_search`): every shard answers the query with a standard
-  HNSW descent (greedy layers -> ef beam at layer 0), emitting its local
-  top-k; a global TakeOrderedAndProject merges. Union of per-shard top-k
+- SEARCH (`hnsw_search_batch`; `hnsw_search` is its one-query form):
+  every shard answers its queries with a standard HNSW descent (greedy
+  layers -> ef beam at layer 0), emitting its local top-k; a per-query
+  top-k over the shard candidates merges. Union of per-shard top-k
   always CONTAINS the global top-k restricted to what each shard's beam
   found, so whole-index recall ~= per-shard graph recall (gated >= 0.8 vs
   exact in tests, the reference's own bar Tests/HNSWBenchmarkTests.cs:169).
@@ -738,34 +739,14 @@ def _route(routing_rows, q: np.ndarray, probe_shards: int) -> list[int]:
     """Top-p shard ids for one query: ascending by the ball lower bound
     max(0, ||q-c|| - r), tie-broken by centroid distance then part_id
     (deterministic). Driver-side over shard-count rows — kept as the
-    reference implementation for tests; the SERVING paths route in-plan
-    (_routing_bound_cols / hnsw_route_queries, round-5 VERDICT 3) so no
-    query ever collects the routing table."""
+    reference implementation for tests; the serving paths route through
+    hnsw_route_queries, the same ordering vectorized over a query batch."""
     scored = []
     for r in routing_rows:
         cd = float(np.linalg.norm(q - np.asarray(r["centroid"], dtype=np.float64)))
         scored.append((max(0.0, cd - float(r["radius"])), cd, int(r["part_id"])))
     scored.sort()
     return [pid for _, _, pid in scored[:probe_shards]]
-
-
-def _routing_bound_cols(query_col) -> tuple:
-    """(lower_bound, centroid_dist) Column pair against a routing row's
-    `centroid`/`radius` columns: cd = ||q - c||, lb = max(0, cd - radius).
-    Sequential double fold — the in-plan twin of _route's float math."""
-    cd = F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                query_col,
-                F.col("centroid"),
-                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda a, v: a + v,
-        )
-    )
-    lb = F.greatest(cd - F.col("radius"), F.lit(0.0))
-    return lb, cd
 
 
 def hnsw_route_queries(
@@ -845,68 +826,25 @@ def hnsw_search(
     k: int,
     ef: int | None = None,  # None = EF_DEFAULT (callers forward their own
     # optional knob without rebuilding kwargs)
-    round_to: int | None = None,
     probe_shards: int | None = None,
     routing: DataFrame | None = None,
     allowed_col: str | None = None,
 ) -> DataFrame:
-    """Search shard graphs, merge shard top-k globally.
-
-    ``allowed_col`` names a BOOLEAN column on ``graph_df`` (e.g. a tag
-    predicate evaluated over artifact-embedded tags — pure pushdown
-    expression, no join): each shard then runs the filtered descent
-    (_ShardGraph.search_filtered — traversal sees everything, only allowed
-    nodes rank; selectivity-adaptive ef inflation with an exact-scan
-    fallback under extreme selectivity). Null flags count as disallowed.
-
-    Per shard: rebuild the adjacency view from the artifact rows (grouped
-    applyInPandas — one Python task per shard), run the standard descent,
-    emit k candidates. Global merge is orderBy+limit = TakeOrderedAndProject
-    (no full sort). (dist, id) tiebreak like every search operator.
-
-    ``probe_shards=p`` (with a ``routing`` table from hnsw_routing_table —
-    built on the fly if omitted) descends only the top-p shards by the
-    centroid+radius lower bound instead of ALL shards: the part_id filter
-    partition-prunes an artifact written partitionBy('part_id'), making
-    per-query work O(p) graphs rather than O(num_shards). ``p=None`` keeps
-    the exhaustive all-shards merge (recall ceiling of the graphs
-    themselves); recall-vs-p measured in docs/RECALL.md."""
-    ef = EF_DEFAULT if ef is None else int(ef)
-    q = np.asarray(query_vec, dtype=np.float64)
-    if probe_shards is not None:
-        # IN-PLAN routing (round-5 VERDICT 3): rank routing rows by the
-        # ball lower bound and semi-join the graph on the top-p part_ids —
-        # TakeOrdered over shard-count rows + a broadcast semi join, no
-        # collect, no driver loop. The part_id filter partition-prunes an
-        # artifact written partitionBy('part_id').
-        rt = routing if routing is not None else hnsw_routing_table(graph_df)
-        lb, cd = _routing_bound_cols(F.lit([float(v) for v in query_vec]))
-        chosen = (
-            rt.select("part_id", lb.alias("_lb"), cd.alias("_cd"))
-            .orderBy(F.col("_lb").asc(), F.col("_cd").asc(), F.col("part_id").asc())
-            .limit(probe_shards)
-            .select("part_id")
+    """One query's top-k over the shard graphs: hnsw_search_batch on a
+    one-query batch, returned as (id, dist) in (dist, id) order. The
+    knobs are the batch operator's: ``allowed_col`` (a BOOLEAN column on
+    ``graph_df`` selecting the filtered descent; null flags count as
+    disallowed) and ``probe_shards``/``routing`` (descend only the top-p
+    shards of a spatial build by the centroid+radius lower bound; None =
+    every shard)."""
+    return (
+        hnsw_search_batch(
+            graph_df, [(0, query_vec)], k, ef=ef, probe_shards=probe_shards,
+            routing=routing, allowed_col=allowed_col,
         )
-        graph_df = graph_df.join(F.broadcast(chosen), "part_id", "semi")
-
-    def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids, g = _rehydrate_cached(pdf)
-        if allowed_col is not None:
-            mask = np.asarray(pdf[allowed_col].fillna(False), dtype=bool)
-            found = g.search_filtered(q, k, ef, mask)
-        else:
-            found = g.search(q, k, ef)
-        return pd.DataFrame(
-            {
-                "id": [int(ids[i]) for i, _ in found],
-                "dist": [float(d) for _, d in found],
-            }
-        )
-
-    local = graph_df.groupBy("part_id").applyInPandas(per_shard, "id long, dist double")
-    if round_to is not None:
-        local = local.withColumn("dist", F.round("dist", round_to))
-    return local.orderBy(F.col("dist").asc(), F.col("id").asc()).limit(k)
+        .drop("query_id")
+        .orderBy(F.col("dist").asc(), F.col("id").asc())
+    )
 
 
 def _graph_nbytes(ids: np.ndarray, g: _ShardGraph) -> int:
@@ -1066,8 +1004,8 @@ def hnsw_search_batch(
     delivers each shard its graph rows AND its queries in one task.
 
     ``probe_shards=p`` routes each query to its own top-p shards (centroid+
-    radius lower bound, per hnsw_search) ENTIRELY IN-PLAN (round-5 VERDICT
-    3 — no routing collect, no driver loop): the (query, shard)
+    radius lower bound, _route's ordering) with no per-query driver work
+    (round-5 VERDICT 3): the (query, shard)
     assignments come from hnsw_route_queries (one vectorized mapInPandas
     over the queries against the shard-count routing table), shards no
     query probes are semi-joined out of the scan, and the cogroup delivers

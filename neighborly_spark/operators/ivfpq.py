@@ -30,8 +30,6 @@ reproducible run to run — gate-able as literal oracle rows.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -509,77 +507,6 @@ def ivfpq_encode(
     return df.select(id_col, vec_col).mapInPandas(encode, schema)
 
 
-def _probe_cells(model: IVFPQModel, query_vec: list[float], nprobe: int) -> list[int]:
-    dists = [
-        (ci, math.sqrt(sum((a - b) ** 2 for a, b in zip(query_vec, c))))
-        for ci, c in enumerate(model.ivf.centroids)
-    ]
-    return [ci for ci, _ in sorted(dists, key=lambda t: (t[1], t[0]))[:nprobe]]
-
-
-def ivfpq_search(
-    encoded: DataFrame,
-    model: IVFPQModel,
-    query_vec: list[float],
-    k: int,
-    nprobe: int = 4,
-    id_col: str = "id",
-) -> DataFrame:
-    """Pure-ADC tier: filter to the nprobe nearest cells (partition pruning
-    on an ivf_write layout), then rank by LUT sums. The per-cell LUTs use
-    the query's PER-CELL residual q - centroid[cell] (the residual trick).
-
-    The LUT ships as ONE FLAT array<double> in a broadcast 1-row frame,
-    indexed at probe_pos*m*k' + s*k' + code_s. Two measured traps shaped
-    this (150k x 64d, nprobe=4, m=8, k'=256 -> 8192 doubles):
-    - nested array<array<array>> literal + two element_at hops: 4.3 s/query
-      (inner arrays materialized per row);
-    - flat literal (F.lit(flat)): execution is fast (0.6 s) but PLANNING a
-      fresh query costs ~3.8 s — analysis/optimization walks the 8k-element
-      literal repeatedly, so every new query pays it.
-    The broadcast LUT row keeps the expression tree literal-free: fresh-call
-    wall 0.64 s, values identical."""
-    if model.rotation is not None:
-        # OPQ: the coarse centroids + codebooks live in rotated space
-        import numpy as np
-
-        query_vec = list(
-            model.rotate(np.asarray(query_vec, dtype=np.float64)[None, :])[0]
-        )
-    probes = _probe_cells(model, query_vec, nprobe)
-    sub_dim, m = model.pq.sub_dim, model.pq.m
-    kp = model.pq.num_centroids
-    books = model.pq.centroids  # [m][k'][sub_dim]
-    flat = []  # [probe_pos][s][ci] flattened
-    for ci in probes:
-        cent = model.ivf.centroids[ci]
-        rq = [a - b for a, b in zip(query_vec, cent)]
-        for s in range(m):
-            qs = rq[s * sub_dim : (s + 1) * sub_dim]
-            for c in books[s]:
-                flat.append(float(sum((a - b) ** 2 for a, b in zip(qs, c))))
-
-    lut_df = encoded.sparkSession.createDataFrame([(flat,)], "_lut: array<double>")
-    flt = encoded.filter(F.col(CLUSTER_COL).isin(probes)).crossJoin(F.broadcast(lut_df))
-    pos = (
-        F.array_position(F.lit(probes).cast("array<int>"), F.col(CLUSTER_COL)).cast("int")
-        - 1
-    )
-    base = pos * (m * kp)
-    total = None
-    for s in range(m):
-        term = F.element_at(
-            F.col("_lut"), base + s * kp + F.element_at(F.col(CODE_COL), s + 1) + 1
-        )
-        total = term if total is None else total + term
-    return (
-        flt.withColumn("dist", F.sqrt(total))
-        .drop("_lut")
-        .orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
 def ivfpq_knn_join(
     encoded: DataFrame,
     model: IVFPQModel,
@@ -618,7 +545,9 @@ def ivfpq_knn_join(
     sizing rule as the snapshot tier. Results are salt-invariant and
     bit-equal to the snapshot tier (shared kernel _score_sorted_codes —
     test-gated). Per-cell and global selection both order by (dist, id),
-    so the candidate set equals the single-query path's exactly.
+    so a query's candidates are its (dist, id)-first ADC rows over its
+    probed cells whatever batch it rides in (ivfpq_search_rerank is this
+    operator on a one-query batch).
 
     ``rerank=True`` (default, requires ``df``) reranks with exact float
     distances via an id join (nq x shortlist float rows).
@@ -636,8 +565,6 @@ def ivfpq_knn_join(
     m, sub_dim, kp = model.pq.m, model.pq.sub_dim, model.pq.num_centroids
     coarse = np.asarray(model.ivf.centroids, dtype=np.float64)
     books = np.stack([np.asarray(c, dtype=np.float64) for c in model.pq.centroids])
-    # same shortlist floor as ivfpq_search_rerank (max(5k, 50)) so batch
-    # and single-query candidate sets match at small k
     fetch = max(shortlist if shortlist is not None else max(5 * k, 50), k) if rerank else k
     # widen a narrow query batch before the python probe stages: a cached
     # limit() table is ONE partition by construction and would serialize
@@ -744,10 +671,10 @@ def ivfpq_knn_join(
 
 def _probe_assign(qsrc: DataFrame, coarse, nprobe: int, rotation=None) -> DataFrame:
     """Vectorized probe-cell assignment over a (query_id, query_embedding)
-    DataFrame: nprobe rows out per query, same squared-distance matrix +
-    stable argsort as the single-query path's _probe_cells, so per-query
-    probed cells (and their order) are equal across every ivfpq query
-    path.
+    DataFrame: nprobe rows out per query, the nprobe nearest cells by
+    squared centroid distance (stable argsort: ties go to the lower cell
+    id) — the probe rule of both ivfpq serving tiers (cogroup and
+    snapshot).
     ``rotation`` (OPQ) rotates the queries batch-side BEFORE probing; the
     emitted query_embedding is the ROTATED vector, so downstream residual
     LUTs stay in the codebooks' space with no second choke point."""
@@ -1156,16 +1083,14 @@ def ivfpq_search_rerank(
     id_col: str = "id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """ADC shortlist -> exact float rerank (the serving default): the probe
-    scan reads only probed-cell code rows; the float table is touched for
-    `shortlist` rows via an id join AQE converts to broadcast."""
-    if shortlist is None:
-        shortlist = max(5 * k, 50)
-    cand = ivfpq_search(encoded, model, query_vec, shortlist, nprobe, id_col).select(id_col)
-    joined = df.join(cand, id_col)
-    d = euclidean(F.col(vec_col), F.lit(query_vec).cast("array<float>"))
+    """One query's ADC shortlist -> exact float rerank (the serving
+    default): ivfpq_knn_join on a one-query batch, returned as
+    (id, dist) in (dist, id) order."""
     return (
-        joined.withColumn("dist", d)
-        .orderBy(F.col("dist").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
+        ivfpq_knn_join(
+            encoded, model, [(0, query_vec)], k, nprobe=nprobe, df=df,
+            shortlist=shortlist, id_col=id_col, vec_col=vec_col,
+        )
+        .drop("query_id")
+        .orderBy(F.col("dist").asc(), F.col(id_col).asc())
     )

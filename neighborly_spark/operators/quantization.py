@@ -1313,8 +1313,8 @@ def pq_search(
     The broadcast row (not an F.lit literal) keeps the expression tree
     literal-free: planning a fresh query against an m*k'-element literal
     costs ~1 s at m=8/k'=256 (analysis/optimization re-walks the literal;
-    the same trap measured 3.8 s on IVFPQ's 8k-element LUT — see
-    operators.ivfpq.ivfpq_search), while execution is identical.
+    the same trap measured 3.8 s on an 8k-element IVFPQ LUT), while
+    execution is identical.
 
     OPQ-rotated models (round 10) rotate the query driver-side before the
     LUT build — orthogonality preserves euclidean distances, so the ADC

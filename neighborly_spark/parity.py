@@ -1382,7 +1382,7 @@ def ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from neighborly_spark.operators.ivf import ivf_assign, ivf_search, ivf_train_sampled
     from neighborly_spark.operators.ivfpq import (
         ivfpq_encode,
-        ivfpq_search_rerank,
+        ivfpq_knn_join,
         ivfpq_train,
     )
     from neighborly_spark.operators.quantization import (
@@ -1431,13 +1431,9 @@ def ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ip_model = ivfpq_train(emb, 64, nlist=16, m=16, num_centroids=32)
     ip_enc = _gate_persist(ivfpq_encode(emb, ip_model))
-    ip_legs = [
-        ivfpq_search_rerank(emb, ip_enc, ip_model, q, _ANN_K, nprobe=10).select(
-            F.lit(i).cast("long").alias("query_id"), "id"
-        )
-        for i, q in enumerate(qvecs)
-    ]
-    ip_all = reduce(DataFrame.unionByName, ip_legs)
+    ip_all = ivfpq_knn_join(
+        ip_enc, ip_model, queries, _ANN_K, nprobe=10, df=emb
+    ).select("query_id", "id")
     return (
         _recall_flag("ivf", ivf_all, exact)
         .unionByName(_recall_flag("pq_rerank", pq_all, exact))

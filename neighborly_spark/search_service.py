@@ -1004,35 +1004,34 @@ class SearchService:
             # row subset: the tag filter simply prunes the hashed table
             model = getattr(self._indexes.get("lsh"), "model", None)
             out = LSH.lsh_knn(base_df, query_vec, k, self.vec_col, model=model)
-        elif method == "hnsw":
+        elif method == "hnsw" and "hnsw" not in self._indexes and metric != "cosine":
+            # not built: capability-mapped batch ANN (SURVEY §7.2 ph. 5);
             # cosine must be baked into the graph edges, so a cosine query
-            # builds it (the euclidean no-graph case keeps the
-            # capability-mapped fallback below, which cosine cannot use)
-            if "hnsw" in self._indexes or metric == "cosine":
-                rec, graph, allowed_col, snapshot = self._hnsw_request(
-                    metric, pred, hnsw_probe_shards, tag_any, tag_all
-                )
-                if snapshot is not None:
-                    hits = snapshot([(0, query_vec)], k, ef=hnsw_ef).drop("query_id")
-                else:
-                    hits = HN.hnsw_search(
-                        graph, query_vec, k, ef=hnsw_ef,
-                        probe_shards=hnsw_probe_shards, routing=rec.routing,
-                        allowed_col=allowed_col,
-                    )
-                # rejoin payload columns so the schema matches the exact
-                # path (k-row broadcast join; AQE picks broadcast)
-                out = (
-                    self.df.withColumn(self.id_col, F.col(self.id_col).cast("long"))
-                    .join(F.broadcast(hits.withColumnRenamed("id", self.id_col)), self.id_col)
-                    .select(*self.df.columns, "dist")
-                    # the payload join does not preserve the shard-merge
-                    # order; re-impose (dist, id) on the k joined rows
-                    .orderBy(F.col("dist").asc(), F.col(self.id_col).asc())
-                )
-            else:
-                # not built: capability-mapped batch ANN (SURVEY §7.2 ph. 5)
-                out = LSH.hnsw_equivalent_knn(base_df, query_vec, k, self.vec_col, self.id_col)
+            # builds the graph instead
+            out = LSH.hnsw_equivalent_knn(base_df, query_vec, k, self.vec_col, self.id_col)
+        elif method in ("hnsw", "ivfpq"):
+            # one query = a one-row batch through the tier's batch code
+            # (snapshot-backed indexes serve worker-resident); ivfpq's
+            # default is the ADC shortlist + exact rerank, the tier that
+            # clears the 0.8 bar on uniform data
+            hits = self._batch_tier(
+                method, [(0, query_vec)], k, base_df=base_df, metric=metric,
+                ivfpq_nprobe=ivfpq_nprobe, hnsw_probe_shards=hnsw_probe_shards,
+                hnsw_ef=hnsw_ef, tag_any=tag_any, tag_all=tag_all,
+            ).drop("query_id")
+            # rejoin the STORED rows' payload columns so the schema matches
+            # the exact path (k-row broadcast join; AQE picks broadcast).
+            # The graph stores long ids: join on the table's own id type
+            hits = hits.withColumnRenamed("id", self.id_col).withColumn(
+                self.id_col, F.col(self.id_col).cast(self.df.schema[self.id_col].dataType)
+            )
+            out = (
+                self.df.join(F.broadcast(hits), self.id_col)
+                .select(*self.df.columns, "dist")
+                # the payload join does not preserve the merge order;
+                # re-impose (dist, id) on the k joined rows
+                .orderBy(F.col("dist").asc(), F.col(self.id_col).asc())
+            )
         elif method == "bq":
             rec, codes = self._serving("bq", metric, pred)
             out = QZ.bq_search_precoded(
@@ -1065,15 +1064,6 @@ class SearchService:
             out = QZ.sq_search_precoded(
                 base_df, codes, rec.model, query_vec, k,
                 id_col=self.id_col, vec_col=self.vec_col, rerank=sq_rerank,
-            )
-        elif method == "ivfpq":
-            rec, encoded = self._serving("ivfpq", metric, pred)
-            # serving default = ADC shortlist + exact rerank, the tier that
-            # clears the 0.8 bar on uniform data (pure ADC is the documented
-            # fast tier — operators.ivfpq)
-            out = IVFPQ.ivfpq_search_rerank(
-                base_df, encoded, rec.model, query_vec, k,
-                nprobe=ivfpq_nprobe, id_col=self.id_col, vec_col=self.vec_col,
             )
         else:
             raise ValueError(f"unknown search method {method!r}")

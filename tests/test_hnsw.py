@@ -8,11 +8,20 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from neighborly_spark.operators.hnsw import hnsw_build, hnsw_search
+from neighborly_spark.operators.hnsw import hnsw_build, hnsw_search, hnsw_search_batch
 from neighborly_spark.operators.knn import knn
 from neighborly_spark.parity import load
 
 SF = "/root/testdata/sf0.01"
+
+
+def _batch_ids(graph, queries, k, **kw) -> list[set]:
+    """Per-query id sets of ONE hnsw_search_batch call over ``queries``
+    (list order)."""
+    by_q = {i: set() for i in range(len(queries))}
+    for r in hnsw_search_batch(graph, list(enumerate(queries)), k, **kw).collect():
+        by_q[r.query_id].add(r.id)
+    return [by_q[i] for i in range(len(queries))]
 
 
 @pytest.fixture(scope="module")
@@ -34,9 +43,8 @@ def graph(spark, emb):
 def test_recall_vs_exact(spark, emb, graph):
     queries = [list(r.embedding) for r in emb.orderBy(F.xxhash64("id")).limit(10).collect()]
     hits = total = 0
-    for q in queries:
+    for q, got in zip(queries, _batch_ids(graph, queries, 10)):
         exact = {r.id for r in knn(emb, q, 10).collect()}
-        got = {r.id for r in hnsw_search(graph, q, 10).collect()}
         assert len(got) == 10
         hits += len(exact & got)
         total += 10
@@ -102,10 +110,14 @@ def test_clustered_single_shard_finds_exact_match(spark):
     vec.count()
     g = hnsw_build(vec, dim=16, num_partitions=1).cache()
     g.count()
+    qrows = vec.orderBy(F.xxhash64("id")).limit(8).collect()
+    by_q = {}
+    for x in hnsw_search_batch(g, [(r.id, list(r.embedding)) for r in qrows], 10).collect():
+        by_q.setdefault(x.query_id, []).append((x.dist, x.id))
     hits = 0
-    for r in vec.orderBy(F.xxhash64("id")).limit(8).collect():
+    for r in qrows:
         q = list(r.embedding)
-        got = [(x.id, x.dist) for x in hnsw_search(g, q, 10).collect()]
+        got = [(i, d) for d, i in sorted(by_q[r.id])]  # (dist, id) order
         assert got[0][0] == r.id and got[0][1] == 0.0, r.id
         exact = {x.id for x in knn(vec, q, 10).collect()}
         hits += len(exact & {i for i, _ in got})
@@ -226,9 +238,8 @@ def test_incremental_add(spark, emb):
 
     queries = [list(r.embedding) for r in emb.orderBy(F.xxhash64("id")).limit(10).collect()]
     hits = 0
-    for q in queries:
+    for q, got in zip(queries, _batch_ids(g1, queries, 10)):
         exact = {r.id for r in knn(emb, q, 10).collect()}
-        got = {r.id for r in hnsw_search(g1, q, 10).collect()}
         hits += len(exact & got)
     assert hits / 100 >= 0.8
 
@@ -347,9 +358,7 @@ def test_probe_shards_spatial_recall(spark):
     """The round-3 VERDICT item: probe_shards=p over a SPATIAL build makes
     per-query work O(p) shards while holding the 0.8 recall bar — and
     probing every shard is identical to the exhaustive path."""
-    from neighborly_spark.operators.hnsw import (
-        hnsw_build, hnsw_routing_table, hnsw_search, hnsw_search_batch,
-    )
+    from neighborly_spark.operators.hnsw import hnsw_routing_table
 
     vec = _clustered(spark).cache()
     vec.count()
@@ -359,10 +368,10 @@ def test_probe_shards_spatial_recall(spark):
     n_shards = rt.count()
 
     queries = [list(r.embedding) for r in vec.orderBy(F.xxhash64("id")).limit(8).collect()]
+    # one batch call, per-query routing
     hits = 0
-    for q in queries:
+    for q, got in zip(queries, _batch_ids(g, queries, 10, probe_shards=2, routing=rt)):
         exact = {r.id for r in knn(vec, q, 10).collect()}
-        got = {r.id for r in hnsw_search(g, q, 10, probe_shards=2, routing=rt).collect()}
         assert len(got) == 10
         hits += len(exact & got)
     assert hits / 80 >= 0.8  # HNSWBenchmarkTests.cs:169 bar, at p=2 of 8
@@ -372,18 +381,6 @@ def test_probe_shards_spatial_recall(spark):
     all_probe = [(r.id, round(r.dist, 9)) for r in hnsw_search(g, q, 10, probe_shards=n_shards, routing=rt).collect()]
     exhaustive = [(r.id, round(r.dist, 9)) for r in hnsw_search(g, q, 10).collect()]
     assert all_probe == exhaustive
-
-    # batch form: per-query routing, same bar
-    batch = hnsw_search_batch(g, list(enumerate(queries)), 10, probe_shards=2, routing=rt)
-    by_q = {}
-    for r in batch.collect():
-        by_q.setdefault(r.query_id, set()).add(r.id)
-    hits = sum(
-        len(by_q[i] & {r.id for r in knn(vec, q, 10).collect()})
-        for i, q in enumerate(queries)
-    )
-    assert all(len(v) == 10 for v in by_q.values())
-    assert hits / 80 >= 0.8
     rt.unpersist()
     g.unpersist()
     vec.unpersist()
@@ -414,11 +411,10 @@ def test_tag_filtered_hnsw_recall_and_extreme_selectivity(spark, emb):
     queries = [list(r.embedding) for r in emb.orderBy(F.xxhash64("id")).limit(5).collect()]
     for tag, min_recall in ((1, 0.8), (13, 0.8)):
         allowed_df = tagged.filter(F.array_contains("tags", tag))
+        fg = g.withColumn("_allowed", F.array_contains("tags", tag))
         hits = total = 0
-        for q in queries:
+        for q, got in zip(queries, _batch_ids(fg, queries, 10, allowed_col="_allowed")):
             exact = {r.id for r in knn(allowed_df, q, 10).collect()}
-            fg = g.withColumn("_allowed", F.array_contains("tags", tag))
-            got = {r.id for r in hnsw_search(fg, q, 10, allowed_col="_allowed").collect()}
             assert got <= {r.id for r in allowed_df.select("id").collect()}, tag
             hits += len(exact & got)
             total += len(exact)
@@ -650,9 +646,8 @@ def test_reference_benchmark_shapes(spark, n, dim):
     build_sec = time.time() - t0
     queries = [list(r.embedding) for r in emb.orderBy(F.xxhash64("id")).limit(10).collect()]
     hits = 0
-    for q in queries:
+    for q, got in zip(queries, _batch_ids(g, queries, 10)):
         exact = {r.id for r in knn(emb, q, 10).collect()}
-        got = {r.id for r in hnsw_search(g, q, 10).collect()}
         hits += len(exact & got)
     assert hits / 100 >= 0.8  # HNSWBenchmarkTests.cs:169
     assert build_sec < 120  # the reference asserts <30s single-node; generous CI margin
@@ -1200,7 +1195,8 @@ def test_search_batch_threads_hnsw_ef(spark, emb):
     with mock.patch.object(H, "hnsw_search_batch", wraps=H.hnsw_search_batch) as spy:
         svc.search_batch(qdf, k=3, method="hnsw", hnsw_ef=99).collect()
     assert spy.call_args.kwargs["ef"] == 99
-    with mock.patch.object(H, "hnsw_search", wraps=H.hnsw_search) as spy:
+    # search() serves a single query through the same batch operator
+    with mock.patch.object(H, "hnsw_search_batch", wraps=H.hnsw_search_batch) as spy:
         svc.search(query_vec=[0.1] * 64, k=3, method="hnsw", hnsw_ef=77).collect()
     assert spy.call_args.kwargs["ef"] == 77
 

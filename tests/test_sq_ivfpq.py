@@ -238,7 +238,9 @@ def test_ivfpq_null_embedding_safe(spark, emb, ivfpq_model, query):
     enc = IVFPQ.ivfpq_encode(with_null, ivfpq_model)
     nrow = enc.filter(F.col("id") == 999999).collect()[0]
     assert nrow.ivf_cluster is None and nrow.pq_code is None
-    out = IVFPQ.ivfpq_search(enc, ivfpq_model, list(query), 5, nprobe=16).collect()
+    out = IVFPQ.ivfpq_knn_join(
+        enc, ivfpq_model, [(0, list(query))], 5, nprobe=16, rerank=False
+    ).collect()
     assert all(r.id != 999999 for r in out)
 
 
@@ -271,13 +273,21 @@ def test_ivfpq_beats_flat_pq_at_equal_bytes_on_clustered_data(spark):
     ip = IVFPQ.ivfpq_train(df, dim, nlist=nblobs, m=8, num_centroids=16)
     ip_enc = IVFPQ.ivfpq_encode(df, ip).cache()
     ip_enc.count()
+    qlist = [(r.id, list(r.embedding)) for r in qrows]
+
+    def batch_ids(out):
+        by_q = {}
+        for x in out.collect():
+            by_q.setdefault(x.query_id, set()).add(x.id)
+        return by_q
+
+    ip_ids = batch_ids(IVFPQ.ivfpq_knn_join(ip_enc, ip, qlist, K, nprobe=nblobs, rerank=False))
     flat_hits = ip_hits = 0
     for r in qrows:
         q = list(r.embedding)
         f_ids = {x.id for x in QZ.pq_search(flat_enc, flat, q, K).collect()}
-        i_ids = {x.id for x in IVFPQ.ivfpq_search(ip_enc, ip, q, K, nprobe=nblobs).collect()}
         flat_hits += len(f_ids & exact_sets[r.id])
-        ip_hits += len(i_ids & exact_sets[r.id])
+        ip_hits += len(ip_ids.get(r.id, set()) & exact_sets[r.id])
     assert ip_hits > flat_hits, (ip_hits, flat_hits)
     # and the composed index clears the recall bar at a LOW probe count
     # (the clusterable operating point the docstrings claim: nprobe/nlist
@@ -287,15 +297,10 @@ def test_ivfpq_beats_flat_pq_at_equal_bytes_on_clustered_data(spark):
     # spacing ~ residual sigma), so the default 5*k shortlist would measure
     # code resolution, not routing (full-probe sl=50 also sits ~0.7 here).
     # Measured: 0.98 at nprobe=4/sl=150; 1.00 at sl=250.
-    lowprobe_hits = 0
-    for r in qrows:
-        i_ids = {
-            x.id
-            for x in IVFPQ.ivfpq_search_rerank(
-                df, ip_enc, ip, list(r.embedding), K, nprobe=4, shortlist=150
-            ).collect()
-        }
-        lowprobe_hits += len(i_ids & exact_sets[r.id])
+    lowprobe = batch_ids(
+        IVFPQ.ivfpq_knn_join(ip_enc, ip, qlist, K, nprobe=4, df=df, shortlist=150)
+    )
+    lowprobe_hits = sum(len(lowprobe.get(r.id, set()) & exact_sets[r.id]) for r in qrows)
     assert lowprobe_hits / (K * len(qrows)) >= 0.8
     flat_enc.unpersist()
     ip_enc.unpersist()
@@ -331,39 +336,64 @@ def test_sq_knn_join_equals_single_query(emb, sq_model):
     codes.unpersist()
 
 
+def _ivfpq_numpy_reference(rows, model, qv, k, nprobe, fetch):
+    """Independent numpy IVFPQ search for one query over ``rows`` (id ->
+    (cell, codes, float32 vector)): the nprobe nearest cells by stable
+    argsort of squared centroid distances, ADC from a direct-form residual
+    LUT sum((r - c)^2), (dist, id) order via lexsort, then — when ``fetch``
+    is given — an exact float rerank of the top-``fetch`` ADC rows.
+    Returns the top-k [(id, dist)]."""
+    coarse = np.asarray(model.ivf.centroids, dtype=np.float64)
+    books = [np.asarray(b, dtype=np.float64) for b in model.pq.centroids]
+    sd, m = model.pq.sub_dim, model.pq.m
+    q = np.asarray(qv, dtype=np.float64)
+    probes = np.argsort(((q[None, :] - coarse) ** 2).sum(axis=1), kind="stable")[:nprobe]
+    ids, adc = [], []
+    for rid, (cell, code, _) in rows.items():
+        if cell not in probes:
+            continue
+        r = q - coarse[cell]
+        lut = [((r[s * sd : (s + 1) * sd][None, :] - books[s]) ** 2).sum(axis=1) for s in range(m)]
+        ids.append(rid)
+        adc.append(np.sqrt(sum(lut[s][code[s]] for s in range(m))))
+    ids, adc = np.asarray(ids), np.asarray(adc)
+    order = np.lexsort((ids, adc))
+    if fetch is None:
+        return [(int(ids[i]), float(adc[i])) for i in order[:k]]
+    short = ids[order[:fetch]]
+    qf = np.asarray(qv, dtype=np.float32).astype(np.float64)
+    exact = np.asarray([np.sqrt(((rows[i][2] - qf) ** 2).sum()) for i in short])
+    keep = np.lexsort((short, exact))[:k]
+    return [(int(short[i]), float(exact[i])) for i in keep]
+
+
 def test_ivfpq_knn_join_equals_single_query(emb, ivfpq_model):
     """ivfpq_knn_join scores each probed-cell code row against every query
     that probes its cell (per-(query,cell) residual LUT gather-sums) and
-    emits only per-partition top-shortlist rows; the merged candidates and
-    reranked top-k equal the single-query path exactly — both orderings are
-    (dist, id)."""
+    emits only per-partition top-shortlist rows; per query, the reranked
+    top-k and the pure-ADC top-k equal an independent numpy reference
+    (direct-form residual LUTs, lexsort (dist, id) order, exact rerank of
+    the max(5k, 50) shortlist)."""
     enc = IVFPQ.ivfpq_encode(emb, ivfpq_model).cache()
     enc.count()
+    vecs = {r.id: np.asarray(r.embedding, dtype=np.float32).astype(np.float64)
+            for r in emb.select("id", "embedding").collect()}
+    rows = {r.id: (r.ivf_cluster, list(r.pq_code), vecs[r.id]) for r in enc.collect()}
     qrows = emb.filter(F.col("id") < 5).orderBy("id").collect()
     qlist = [(int(r.id), list(r.embedding)) for r in qrows]
-    batch = IVFPQ.ivfpq_knn_join(enc, ivfpq_model, qlist, K, nprobe=10, df=emb)
-    got = {}
-    for r in batch.collect():
-        got.setdefault(r.query_id, []).append((r.id, round(r.dist, 6)))
-    for qid, qv in qlist:
-        single = [
-            (x.id, round(x.dist, 6))
-            for x in IVFPQ.ivfpq_search_rerank(
-                emb, enc, ivfpq_model, qv, K, nprobe=10
-            ).collect()
-        ]
-        assert sorted(got[qid]) == sorted(single), qid
-    # pure-ADC tier too
-    pure = IVFPQ.ivfpq_knn_join(enc, ivfpq_model, qlist, K, nprobe=10, rerank=False)
-    got = {}
-    for r in pure.collect():
-        got.setdefault(r.query_id, []).append((r.id, round(r.dist, 6)))
-    for qid, qv in qlist:
-        single = [
-            (x.id, round(x.dist, 6))
-            for x in IVFPQ.ivfpq_search(enc, ivfpq_model, qv, K, nprobe=10).collect()
-        ]
-        assert sorted(got[qid]) == sorted(single), qid
+    for rerank, fetch in ((True, max(5 * K, 50)), (False, None)):
+        batch = IVFPQ.ivfpq_knn_join(
+            enc, ivfpq_model, qlist, K, nprobe=10, df=emb if rerank else None, rerank=rerank
+        )
+        got = {}
+        for r in batch.collect():
+            got.setdefault(r.query_id, []).append((r.id, round(r.dist, 6)))
+        for qid, qv in qlist:
+            want = [
+                (i, round(d, 6))
+                for i, d in _ivfpq_numpy_reference(rows, ivfpq_model, qv, K, 10, fetch)
+            ]
+            assert sorted(got[qid]) == sorted(want), (rerank, qid)
     enc.unpersist()
 
 
@@ -429,8 +459,8 @@ def test_non_finite_vectors_do_not_poison_models(spark):
     assert all(math.isfinite(v) for v in flat)
     enc = {r.id: (r.ivf_cluster, r.pq_code) for r in IVFPQ.ivfpq_encode(df, ip).collect()}
     assert enc[100] == (None, None) and enc[103] == (None, None)
-    out = IVFPQ.ivfpq_search(
-        IVFPQ.ivfpq_encode(df, ip), ip, [1.0, 1.0, 1.0], 5, nprobe=4
+    out = IVFPQ.ivfpq_knn_join(
+        IVFPQ.ivfpq_encode(df, ip), ip, [(0, [1.0, 1.0, 1.0])], 5, nprobe=4, rerank=False
     ).collect()
     assert all(r.id not in (100, 103) for r in out)
 
@@ -556,10 +586,14 @@ def test_cosine_metric_matrix_quantized_tiers(spark, emb):
     got_nr = [r.id for r in svc.search(query_vec=q, k=K, method="sq", metric="cosine").collect()]
     assert _recall(got_nr, exact_ids) >= 0.8
 
-    # ivfpq rerank tier: recall bar + true similarities
-    got = [(r.id, float(r.dist)) for r in svc.search(
+    # ivfpq rerank tier: recall bar + true similarities, and each hit
+    # carries its STORED embedding (not the normalized serving view)
+    stored = {r.id: list(r.embedding) for r in emb.collect()}
+    hits = svc.search(
         query_vec=q, k=K, method="ivfpq", metric="cosine", ivfpq_nprobe=10
-    ).collect()]
+    ).collect()
+    assert all(list(r.embedding) == stored[r.id] for r in hits)
+    got = [(r.id, float(r.dist)) for r in hits]
     assert _recall([i for i, _ in got], exact_ids) >= 0.8
     for rid, sim in got:
         if rid in exact_sim:
@@ -576,9 +610,9 @@ def test_cosine_metric_matrix_quantized_tiers(spark, emb):
 
     # hnsw: graph built over normalized vectors, similarities reported
     svc_h = SearchService(emb, dim=64)
-    got = [(r.id, float(r.dist)) for r in svc_h.search(
-        query_vec=q, k=K, method="hnsw", metric="cosine"
-    ).collect()]
+    hits = svc_h.search(query_vec=q, k=K, method="hnsw", metric="cosine").collect()
+    assert all(list(r.embedding) == stored[r.id] for r in hits)
+    got = [(r.id, float(r.dist)) for r in hits]
     assert svc_h._indexes["hnsw"].metric == "cosine"
     assert _recall([i for i, _ in got], exact_ids) >= 0.8
     for rid, sim in got:
@@ -1035,6 +1069,12 @@ def test_search_service_ivfpq_snapshot_roundtrip(spark, emb, tmp_path):
         for r in loaded.search_batch(qdf, k=K, method="ivfpq").collect()
     )
     assert after_load == before
+    # a single query serves from the snapshot too: the plan scans no file
+    # of the code table (workers read their cells directly)
+    one = loaded.search(query_vec=list(qdf.first().query_embedding), k=K, method="ivfpq")
+    scanned = one.inputFiles()
+    assert scanned and not any("/indexes/ivfpq_encoded/" in f for f in scanned), scanned
+    assert one.count() == K
     # tag filter: since round 9 served FROM THE SNAPSHOT (worker-side
     # mask over artifact-embedded tags — zero-reship holds under
     # filtering), every hit satisfies the filter, and results equal the
