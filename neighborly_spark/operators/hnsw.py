@@ -26,7 +26,8 @@ Spark-first architecture (the Lucene/Elasticsearch segment-graph shape):
   driver-side state.
 - SEARCH (`hnsw_search_batch`; `hnsw_search` is its one-query form):
   every shard answers its queries with a standard HNSW descent (greedy
-  layers -> ef beam at layer 0), emitting its local top-k; a per-query
+  layers -> ef beam at layer 0), all of a task's queries in one lockstep
+  beam (`_ShardGraph.search_batch`), emitting its local top-k; a per-query
   top-k over the shard candidates merges. Union of per-shard top-k
   always CONTAINS the global top-k restricted to what each shard's beam
   found, so whole-index recall ~= per-shard graph recall (gated >= 0.8 vs
@@ -138,14 +139,22 @@ class _ShardGraph:
     capped shards at 10k rows): all layers' adjacency lives in ONE
     preallocated int32 matrix (node i, layer l) -> row row_off[i]+l, with a
     degree counter per row (row capacity max_conn+1 so an append can
-    overflow by exactly one before the prune). Visited bookkeeping is an
-    epoch-tagged int array reused across searches (no per-search set
-    rehashing). Levels are drawn up front (the whole shard's RNG stream is
-    known at construction), so row offsets are a single cumsum.
+    overflow by exactly one before the prune). Levels are drawn up front
+    (the whole shard's RNG stream is known at construction), so row
+    offsets are a single cumsum.
 
-    float32 vector storage: halves the gather memory traffic of the insert
-    loop; distances are ORDERING inputs only — quality is recall-gated,
-    and the final reported distances are recomputed exactly in search()."""
+    Two beams share one set of rules. ``_search_layer`` is the serial
+    one-query beam (heapq frontier, epoch-tagged visited array reused
+    across calls): each insert runs it, since each insert mutates the
+    graph the next one searches. ``search_batch`` answers QUERIES: it
+    advances every query of a shard task in lockstep, one numpy step per
+    beam round for all of them, and returns what the serial beam would
+    (up to exact float32 distance ties); ``search`` and
+    ``search_filtered`` are its one-row calls.
+
+    float32 vector storage: halves the gather memory traffic of the beams;
+    distances are ORDERING inputs only — quality is recall-gated, and the
+    reported distances are recomputed exactly (float64) for the final k."""
 
     #: Candidates expanded per beam iteration. One numpy batch then gathers
     #: ~B x degree neighbor rows — amortizing numpy's fixed per-call cost
@@ -462,27 +471,6 @@ class _ShardGraph:
             rr = np.asarray(rws, dtype=np.int64)
             self._reselect_rows(rr, self.x[owners[rr]].astype(np.float64), mc)
 
-    def search(self, q: np.ndarray, k: int, ef: int) -> list[tuple[int, float]]:
-        if self.entry < 0:
-            return []
-        return self._descend(q, k, max(ef, k))
-
-    def _descend(
-        self, q: np.ndarray, k: int, ef: int, allowed: np.ndarray | None = None
-    ) -> list[tuple[int, float]]:
-        """Greedy descent through the upper layers (unfiltered: every node
-        routes), then the layer-0 beam of width ``ef`` over ``allowed``."""
-        q32 = np.asarray(q, dtype=np.float32)
-        ep = np.array([self.entry], dtype=np.int64)
-        for layer in range(int(self.levels[self.entry]), 0, -1):
-            ep = self._search_layer(q32, ep, 1, layer)
-        found = self._search_layer(q32, ep, ef, 0, allowed)[:k]
-        # exact float64 distances for the reported values (beam ordering was
-        # float32-squared; the k results are re-ranked exactly here)
-        d = self._dist(q, found)
-        order = np.argsort(d, kind="stable")
-        return [(int(found[j]), float(d[j])) for j in order]
-
     #: Filtered search falls back to an EXACT scan of the allowed rows when
     #: they number <= this multiple of max(ef, k): at that size the brute
     #: force costs fewer distance evals than an inflated beam AND its
@@ -494,38 +482,251 @@ class _ShardGraph:
     #: multiple of ef (the standard filtered-HNSW heuristic; past it the
     #: brute-force tier is the better tool and usually already triggered).
     _FILTER_EF_CAP_MULT = 10
+    #: Bytes of per-chunk scratch in search_batch: the layer-0 visited
+    #: matrix (one bool row per query, ~320 queries at the 50,000-row shard
+    #: target) and the exact scan's float64 difference block.
+    _CHUNK_BYTES = 16 << 20
+
+    def search(self, q: np.ndarray, k: int, ef: int) -> list[tuple[int, float]]:
+        """One query's top-k as (position, exact distance): a one-row
+        search_batch."""
+        return self._one_row(self.search_batch(np.asarray(q, dtype=np.float64)[None], k, ef))
 
     def search_filtered(
         self, q: np.ndarray, k: int, ef: int, allowed: np.ndarray
     ) -> list[tuple[int, float]]:
-        """Tag-filtered descent (P9 composed with Q8): `allowed` is a bool
-        mask over node positions. Selectivity-adaptive: tiny allowed sets
-        get an exact scan (recall 1.0); otherwise the layer-0 beam runs
-        with ef inflated by 1/selectivity (capped) and only allowed nodes
-        collect into the beam."""
-        if self.entry < 0:
-            return []
-        n_allowed = int(allowed.sum())
-        if n_allowed == 0:
-            return []
+        """Tag-filtered descent (P9 composed with Q8) for one query: a
+        one-row search_batch with ``allowed`` (a bool mask over node
+        positions) — see search_batch for the selectivity rules."""
+        return self._one_row(
+            self.search_batch(np.asarray(q, dtype=np.float64)[None], k, ef, allowed)
+        )
+
+    @staticmethod
+    def _one_row(res: tuple[np.ndarray, np.ndarray]) -> list[tuple[int, float]]:
+        pos, dist = res
+        return [(int(p), float(d)) for p, d in zip(pos[0], dist[0]) if p >= 0]
+
+    def search_batch(
+        self, Q: np.ndarray, k: int, ef: int, allowed: np.ndarray | None = None
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """Top-k of every row of ``Q`` (nq, dim), searched in LOCKSTEP: one
+        numpy step advances every query's beam, instead of one heapq loop
+        per query. Returns (positions, distances), both (nq, k): node
+        positions ascending by exact float64 distance, padded with -1 /
+        +inf where a query found fewer than k nodes.
+
+        Per query it is the serial HNSW search (HNSW.cs:151-248): the ef=1
+        greedy descent through the upper layers (every node routes), the
+        layer-0 beam of width max(ef, k), then an exact float64 re-rank of
+        the first k by (float32 squared distance, position). The lockstep
+        form returns exactly what that serial composition of _search_layer
+        calls returns, except at exact float32 distance ties (the serial
+        heaps break those by arrival order).
+
+        ``allowed`` (bool mask over node positions) selects the filtered
+        search. Its selectivity rules are computed ONCE for all rows, since
+        the mask is shared: no allowed node returns nothing; a small
+        allowed set (<= _FILTER_BRUTE_MULT x max(ef, k), or one the inflated
+        beam would have to exhaust) gets an exact scan — one (queries x
+        allowed rows) distance block, recall 1.0 by construction —
+        otherwise the layer-0 beam runs with ef inflated by 1/selectivity
+        (capped at _FILTER_EF_CAP_MULT x ef and at the allowed count) and
+        only allowed nodes collect into it. The traversal still sees every
+        node (see _search_layer).
+
+        Queries run in chunks of ~_CHUNK_BYTES of visited marks. The last
+        row's layer-0 visited nodes are left tagged with a fresh
+        ``epoch`` in ``visit_tag``, as a serial _search_layer leaves its
+        own, so a caller can count the nodes one search touched."""
+        Q = np.asarray(Q, dtype=np.float64)
+        nq, n = len(Q), len(self.levels)
+        pos = np.full((nq, k), -1, dtype=np.int64)
+        dist = np.full((nq, k), np.inf)
+        if self.entry < 0 or nq == 0 or k <= 0:
+            return pos, dist
         eff = max(ef, k)
-        sel = n_allowed / len(self.x)
-        # cap the inflated beam at n_allowed: an ef_eff the filter can never
-        # fill leaves the termination bound at +inf and the beam walks the
-        # whole shard — when that would happen, the exact scan of the
-        # allowed rows is strictly cheaper AND recall-1.0
-        ef_eff = int(min(
-            len(self.x),
-            max(eff, math.ceil(eff / sel)),
-            self._FILTER_EF_CAP_MULT * eff,
-            n_allowed,
-        ))
-        if n_allowed <= self._FILTER_BRUTE_MULT * eff or ef_eff >= n_allowed:
-            idx = np.flatnonzero(allowed)
-            d = self._dist(q, idx)
-            order = np.lexsort((idx, d))[:k]
-            return [(int(idx[j]), float(d[j])) for j in order]
-        return self._descend(q, k, ef_eff, allowed)
+        if allowed is not None:
+            n_allowed = int(allowed.sum())
+            if n_allowed == 0:
+                return pos, dist
+            # cap the inflated beam at n_allowed: an ef_eff the filter can
+            # never fill leaves the termination bound at +inf and the beam
+            # walks the whole shard — when that would happen, the exact
+            # scan of the allowed rows is strictly cheaper AND recall-1.0
+            sel = n_allowed / n
+            eff_f = int(min(
+                n,
+                max(eff, math.ceil(eff / sel)),
+                self._FILTER_EF_CAP_MULT * eff,
+                n_allowed,
+            ))
+            if n_allowed <= self._FILTER_BRUTE_MULT * eff or eff_f >= n_allowed:
+                self._scan(Q, np.flatnonzero(allowed), pos, dist)
+                return pos, dist
+            eff = eff_f
+        step = max(1, self._CHUNK_BYTES // n)
+        for s in range(0, nq, step):
+            q64 = Q[s: s + step]
+            q32 = q64.astype(np.float32)
+            found = self._beam0(q32, self._greedy(q32), eff, allowed)[:, :k]
+            pos[s: s + step], dist[s: s + step] = self._rerank(q64, found)
+        return pos, dist
+
+    #: search_batch's packed beam key: (float32 squared-distance bits << 32)
+    #: | node position. Non-negative float32 bit patterns order like their
+    #: values, so one int64 compare orders by (distance, position); the
+    #: empty slot sorts after every key.
+    _EMPTY = np.iinfo(np.int64).max
+
+    def _sqdist(self, q32: np.ndarray, rows: np.ndarray, nodes: np.ndarray) -> np.ndarray:
+        """float32 squared distances of query rows ``q32[rows]`` to
+        ``nodes`` — the same per-row einsum _search_layer runs, so each
+        value is bit-identical to the serial beam's."""
+        d = self.x.take(nodes, axis=0)
+        d -= q32.take(rows, axis=0)
+        return np.einsum("ij,ij->i", d, d)
+
+    @staticmethod
+    def _key(d: np.ndarray, nodes: np.ndarray) -> np.ndarray:
+        return (d.view(np.int32).astype(np.int64) << 32) | nodes
+
+    def _used_columns(self) -> np.ndarray:
+        """The adjacency columns some row uses (the rest is build slack)."""
+        return self.nbr[:, : int(self.deg.max())]
+
+    def _greedy(self, q32: np.ndarray) -> np.ndarray:
+        """The ef=1 descent from the entry point through layers top..1 for
+        every query at once: a step moves each still-moving query to its
+        current node's nearest neighbor by (distance, position) if that
+        is strictly nearer — what _search_layer(q, ep, 1, layer) does.
+        (No visited marks: a node seen before is never strictly nearer
+        than the current one.) Returns the layer-0 entry per query."""
+        nq = len(q32)
+        cur = np.full(nq, self.entry, dtype=np.int64)
+        nbr = self._used_columns()
+        col = np.arange(nbr.shape[1])
+        everyone = np.arange(nq)
+        for layer in range(int(self.levels[self.entry]), 0, -1):
+            dcur = self._sqdist(q32, everyone, cur).view(np.int32).astype(np.int64)
+            act = everyone
+            while act.size:
+                rows = self.row_off[cur[act]] + layer
+                deg = self.deg[rows]
+                ok = col < deg[:, None]
+                nodes = nbr.take(rows, axis=0)[ok]
+                keys = np.full(ok.shape, self._EMPTY)
+                keys[ok] = self._key(self._sqdist(q32, np.repeat(act, deg), nodes), nodes)
+                nxt = keys.min(axis=1, initial=self._EMPTY)
+                moved = (nxt >> 32) < dcur[act]
+                act = act[moved]
+                cur[act] = nxt[moved] & 0xFFFFFFFF
+                dcur[act] = nxt[moved] >> 32
+        return cur
+
+    def _beam0(
+        self, q32: np.ndarray, ep: np.ndarray, ef: int, allowed: np.ndarray | None
+    ) -> np.ndarray:
+        """Layer-0 beam of width ``ef`` for every query at once, from entry
+        positions ``ep``; returns (nq, ef) positions ascending by
+        (float32 squared distance, position), -1-padded.
+
+        Each query's state is a row of padded key arrays: ``best`` holds
+        its ef smallest allowed keys (unordered; the largest is the bound,
+        +inf until ef allowed nodes were seen), ``front`` its unexpanded
+        candidates, ascending. One step per round, for every query:
+          - pop up to _BEAM_BATCH front keys (1 at ef=1). The front only
+            ever holds keys within the bound, so this is the serial pop
+            rule "distance <= this step's bound";
+          - gather the popped nodes' adjacency in one fancy-index, drop
+            nodes the query already visited, dedupe per query in position
+            order and mark the rest visited;
+          - one einsum for the squared distances of the whole frontier,
+            then the serial bound prefilter (strictly below the step's
+            bound);
+          - a partition select merges the allowed survivors into ``best``;
+            the front keeps the survivors and old keys within the new
+            bound (a candidate past it can never be popped again, since
+            the bound only shrinks once ef nodes are in).
+        A query whose front is empty is done — the serial loop's exit."""
+        x_n = len(self.levels)
+        nq, empty = len(q32), self._EMPTY
+        bsz = 1 if ef == 1 else self._BEAM_BATCH
+        nbr = self._used_columns()
+        col = np.arange(nbr.shape[1])
+        vis = np.zeros((nq, x_n), dtype=bool)
+        visited = vis.reshape(-1)  # flat view: row * x_n + position
+        qid = np.arange(nq)
+        vis[qid, ep] = True
+        k0 = self._key(self._sqdist(q32, qid, ep), ep)
+        best = np.full((nq, ef), empty)
+        best[:, 0] = k0 if allowed is None else np.where(allowed[ep], k0, empty)
+        front = k0[:, None]
+        out = np.empty((nq, ef), dtype=np.int64)
+        bound = best.max(axis=1) >> 32  # an unfilled row's max is `empty`
+        while qid.size:
+            popped = front[:, :bsz]
+            pi, pj = np.nonzero(popped != empty)
+            rows = self.row_off[popped[pi, pj] & 0xFFFFFFFF]
+            deg = self.deg[rows]
+            cn = nbr.take(rows, axis=0)[col < deg[:, None]]
+            cq = np.repeat(pi, deg)  # active-row index of each gathered neighbor
+            fresh = ~visited[qid[cq] * x_n + cn]
+            # dedupe per query in position order: one sort of (row, node)
+            cq, cn = np.divmod(np.unique(cq[fresh] * x_n + cn[fresh]), x_n)
+            visited[qid[cq] * x_n + cn] = True
+            keys = self._key(self._sqdist(q32, qid[cq], cn), cn)
+            keep = (keys >> 32) < bound[cq]
+            cq, cn, keys = cq[keep], cn[keep], keys[keep]
+            # scatter each query's survivors into a padded row block; cq is
+            # sorted, so a survivor's slot is its rank within its query
+            counts = np.bincount(cq, minlength=len(qid))
+            slot = np.arange(len(cq)) - (np.cumsum(counts) - counts)[cq]
+            new = np.full((len(qid), int(counts.max(initial=0))), empty)
+            new[cq, slot] = keys
+            if new.shape[1]:
+                cand = new
+                if allowed is not None:
+                    cand = np.full_like(new, empty)
+                    cand[cq, slot] = np.where(allowed[cn], keys, empty)
+                best = np.partition(np.concatenate([best, cand], axis=1), ef - 1, axis=1)[:, :ef]
+            bound = best.max(axis=1) >> 32
+            front = np.concatenate([front[:, bsz:], new], axis=1)
+            front[(front >> 32) > bound[:, None]] = empty
+            front.sort(axis=1)
+            front = front[:, : int((front != empty).sum(axis=1).max(initial=0))]
+            done = front[:, 0] == empty if front.shape[1] else np.ones(len(qid), dtype=bool)
+            out[qid[done]] = best[done]
+            qid, best, front, bound = qid[~done], best[~done], front[~done], bound[~done]
+        self.epoch += 1
+        self.visit_tag[vis[-1]] = self.epoch
+        out.sort(axis=1)
+        return np.where(out == empty, -1, out & 0xFFFFFFFF)
+
+    def _rerank(self, q64: np.ndarray, found: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Exact float64 distances of each row's ``found`` positions (-1:
+        none), then a stable per-row sort — ties keep the beam's
+        (float32 distance, position) order."""
+        d = np.full(found.shape, np.inf)
+        qi, ci = np.nonzero(found >= 0)
+        diff = self.x[found[qi, ci]].astype(np.float64) - q64[qi]
+        d[qi, ci] = np.sqrt(np.einsum("ij,ij->i", diff, diff))
+        order = np.argsort(d, axis=1, kind="stable")
+        return np.take_along_axis(found, order, 1), np.take_along_axis(d, order, 1)
+
+    def _scan(self, Q: np.ndarray, idx: np.ndarray, pos: np.ndarray, dist: np.ndarray) -> None:
+        """Exact top-k of every row of ``Q`` over the nodes ``idx``
+        (ascending), ties by position, written into ``pos`` / ``dist``:
+        one (queries x nodes) distance block per chunk."""
+        xa = self.x[idx].astype(np.float64)
+        k = min(pos.shape[1], len(idx))
+        step = max(1, self._CHUNK_BYTES // max(1, xa.nbytes))
+        for s in range(0, len(Q), step):
+            diff = (xa[None, :, :] - Q[s: s + step, None, :]).reshape(-1, xa.shape[1])
+            d = np.sqrt(np.einsum("ij,ij->i", diff, diff)).reshape(-1, len(idx))
+            order = np.argsort(d, axis=1, kind="stable")[:, :k]
+            pos[s: s + step, :k] = idx[order]
+            dist[s: s + step, :k] = np.take_along_axis(d, order, 1)
 
 
 def _build_shard(
@@ -956,22 +1157,20 @@ def _answer_queries(
     ids: np.ndarray, g: _ShardGraph, mask, q_pdf: pd.DataFrame, k: int, ef: int
 ) -> pd.DataFrame:
     """One shard's (query_id, id, dist) candidates for every query row of
-    ``q_pdf`` — the per-shard loop of both batch tiers (in-memory cogroup
-    and worker-resident snapshot). ``mask`` (bool over node positions or
-    None) selects the filtered descent."""
-    out_q, out_id, out_d = [], [], []
-    for r in q_pdf.itertuples():
-        q = np.asarray(r.query_embedding, dtype=np.float64)
-        found = g.search(q, k, ef) if mask is None else g.search_filtered(q, k, ef, mask)
-        for i, d in found:
-            out_q.append(int(r.query_id))
-            out_id.append(int(ids[i]))
-            out_d.append(float(d))
+    ``q_pdf`` — the per-shard step of both batch tiers (in-memory cogroup
+    and worker-resident snapshot): ONE lockstep _ShardGraph.search_batch
+    over all of the task's queries, and output columns cut from its result
+    arrays (rows per query in ascending distance). ``mask`` (bool over node
+    positions or None) selects the filtered search."""
+    dim = g.x.shape[1]
+    Q = np.stack(q_pdf["query_embedding"].to_numpy()) if len(q_pdf) else np.zeros((0, dim))
+    pos, dist = g.search_batch(Q, k, ef, mask)
+    hit = pos >= 0
     return pd.DataFrame(
         {
-            "query_id": pd.Series(out_q, dtype="int64"),
-            "id": pd.Series(out_id, dtype="int64"),
-            "dist": pd.Series(out_d, dtype="float64"),
+            "query_id": np.repeat(q_pdf["query_id"].to_numpy(dtype=np.int64), hit.sum(axis=1)),
+            "id": ids[pos[hit]].astype(np.int64),
+            "dist": dist[hit],
         }
     )
 
@@ -987,7 +1186,9 @@ def hnsw_search_batch(
     trust_routing: bool = False,
 ) -> DataFrame:
     """Batch form: every shard answers ALL queries in one task (the graph
-    is rehydrated once per shard, not once per query), emitting
+    is rehydrated once per shard, not once per query, and the task's
+    queries advance through ONE lockstep beam, _ShardGraph.search_batch,
+    not one heapq loop each), emitting
     (query_id, id, dist) candidates; per-query top-k is then taken over the
     shard candidates — a row_number over at most shards x k rows per query,
     bounded by the shard count, never by data size.
@@ -1423,7 +1624,9 @@ def hnsw_search_batch_snapshot(
     p=2 over 16 shards = 16 tasks on 32 cores). Salting multiplies
     shard loads per worker (the LRU absorbs repeats), so keep s modest
     (2-8); results are identical for any s — the per-query descent does
-    not depend on which task runs it.
+    not depend on which task runs it, nor on which other queries share
+    the task's lockstep beam (_answer_queries: one _ShardGraph.search_batch
+    per task, each query's beam state its own row).
 
     ``sq8`` serves an SQ8-quantized artifact (hnsw_snapshot_write(
     sq8=True) / SearchService.save(hnsw_sq8=True)): pass the manifest's

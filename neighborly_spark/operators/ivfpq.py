@@ -817,6 +817,8 @@ def _merge_and_rerank(
 #: (8 + 8m)) + parsed tag sets, charged at load.
 #: Per-worker hit/miss counters (test observability; reset freely).
 _SNAPSHOT_CELL_STATS = {"hits": 0, "misses": 0}
+#: Driver-side memo of saved code tables' schemas, keyed (path, version).
+_SNAPSHOT_SCHEMAS: dict = {}
 
 
 def _confirm_missing(part: str) -> bool:
@@ -1049,8 +1051,13 @@ def ivfpq_knn_join_snapshot(
 
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    # the artifact's own id type (a driver-side schema read, no data scan)
-    id_field = spark.read.parquet(codes_path).schema[id_col]
+    # the artifact's own id type: a parquet schema read lists the files in
+    # a Spark job, so it runs once per (path, version) — a version pins its
+    # artifact
+    key = (codes_path, version)
+    if key not in _SNAPSHOT_SCHEMAS:
+        _SNAPSHOT_SCHEMAS[key] = spark.read.parquet(codes_path).schema
+    id_field = _SNAPSHOT_SCHEMAS[key][id_col]
     schema = StructType(
         [
             StructField("query_id", LongType()),

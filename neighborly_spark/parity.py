@@ -1390,7 +1390,7 @@ def ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_search_rerank,
         pq_train_sampled,
         sq_encode_expr,
-        sq_search_precoded,
+        sq_knn_join,
         sq_train,
     )
 
@@ -1421,13 +1421,9 @@ def ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     sq_codes = _gate_persist(
         emb.select("id", sq_encode_expr("embedding", sq_model).alias("code"))
     )
-    sq_legs = [
-        sq_search_precoded(emb, sq_codes, sq_model, q, _ANN_K, rerank=False).select(
-            F.lit(i).cast("long").alias("query_id"), "id"
-        )
-        for i, q in enumerate(qvecs)
-    ]
-    sq_all = reduce(DataFrame.unionByName, sq_legs)
+    sq_all = sq_knn_join(sq_codes, sq_model, queries, _ANN_K, rerank=False).select(
+        "query_id", "id"
+    )
 
     ip_model = ivfpq_train(emb, 64, nlist=16, m=16, num_centroids=32)
     ip_enc = _gate_persist(ivfpq_encode(emb, ip_model))

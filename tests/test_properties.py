@@ -423,6 +423,92 @@ def test_search_layer_all_true_mask_equals_unfiltered(n, seed, k):
             assert np.array_equal(got, want), (layer, ef)
 
 
+def _serial_search(g, q, k, ef, allowed=None):
+    """The serial search the lockstep kernel replaces, composed from the
+    one-query beam _search_layer: search_filtered's selectivity rules,
+    then greedy ef=1 beams down the upper layers, the layer-0 beam, and
+    the exact float64 re-rank. Returns (branch, [(position, dist)])."""
+    import math
+
+    import numpy as np
+
+    eff = max(ef, k)
+    if allowed is not None:
+        n_allowed = int(allowed.sum())
+        if n_allowed == 0:
+            return "none", []
+        sel = n_allowed / len(g.x)
+        ef_eff = int(min(
+            len(g.x), max(eff, math.ceil(eff / sel)), g._FILTER_EF_CAP_MULT * eff, n_allowed,
+        ))
+        if n_allowed <= g._FILTER_BRUTE_MULT * eff or ef_eff >= n_allowed:
+            idx = np.flatnonzero(allowed)
+            d = g._dist(q, idx)
+            order = np.lexsort((idx, d))[:k]
+            return "scan", [(int(idx[j]), float(d[j])) for j in order]
+        eff = ef_eff
+    q32 = np.asarray(q, dtype=np.float32)
+    ep = np.array([g.entry], dtype=np.int64)
+    for layer in range(int(g.levels[g.entry]), 0, -1):
+        ep = g._search_layer(q32, ep, 1, layer)
+    found = g._search_layer(q32, ep, eff, 0, allowed)[:k]
+    d = g._dist(q, found)
+    order = np.argsort(d, kind="stable")
+    return "beam", [(int(found[j]), float(d[j])) for j in order]
+
+
+@pytest.mark.parametrize("n", [1, 2, 50, 200, 2000])
+@settings(max_examples=3, deadline=None)
+@given(seed=st.integers(min_value=0, max_value=2**31 - 2),
+       nq=st.integers(min_value=1, max_value=300),
+       k=st.integers(min_value=1, max_value=10))
+def test_search_batch_lockstep_equals_serial_beam(n, seed, nq, k):
+    """Lockstep law: _ShardGraph.search_batch, which advances every
+    query's beam in one numpy step, returns for every row exactly the ids
+    and distances of the serial per-query search (_serial_search) — at
+    ef=1 (greedy layer 0), ef=k and ef larger than the shard, unfiltered
+    and under masks that take each filtered branch: all-false (nothing),
+    one allowed node and a dense prefix (the exact scan), every second
+    node (the inflated-ef beam once that leaves > 4 x max(ef, k) allowed).
+    Seeded gaussian shards, so float32 distance ties (where the serial
+    heaps' arrival order may differ) do not occur."""
+    import numpy as np
+
+    from neighborly_spark.operators.hnsw import _ShardGraph
+
+    rng = np.random.RandomState(seed)
+    x = rng.normal(0.0, 5.0, (n, 6))
+    m = 4 if seed % 2 else 16
+    g = _ShardGraph(x, m, 2 * m, 32, 1.0, np.random.RandomState(seed))
+    for i in range(n):
+        g.insert(i)
+    g.finalize()
+    Q = rng.normal(0.0, 5.0, (nq, x.shape[1]))
+    for ef in (1, k, n + 5):
+        eff = max(ef, k)
+        one = np.zeros(n, dtype=bool)
+        one[rng.randint(n)] = True
+        masks = {
+            "none": None,
+            "all_false": np.zeros(n, dtype=bool),
+            "one": one,
+            "scan": np.arange(n) < g._FILTER_BRUTE_MULT * eff,
+            "inflated": np.arange(n) % 2 == 0,
+        }
+        for name, allowed in masks.items():
+            pos, dist = g.search_batch(Q, k, ef, allowed)
+            assert pos.shape == dist.shape == (nq, k)
+            for i, q in enumerate(Q):
+                branch, want = _serial_search(g, q, k, ef, allowed)
+                got = [(int(p), float(d)) for p, d in zip(pos[i], dist[i]) if p >= 0]
+                assert got == want, (name, ef, i)
+                assert all(p == -1 for p in pos[i, len(want):])
+            if name == "scan" or name == "one":
+                assert branch == "scan"
+            if name == "inflated" and (n + 1) // 2 > g._FILTER_BRUTE_MULT * eff:
+                assert branch == "beam"
+
+
 @settings(max_examples=200, deadline=None)
 @given(st.lists(_hnsw_vec, min_size=1, max_size=50, unique_by=tuple),
        st.integers(min_value=0, max_value=2**31 - 2))

@@ -1106,6 +1106,27 @@ def test_search_service_ivfpq_snapshot_roundtrip(spark, emb, tmp_path):
     tagged.unpersist()
 
 
+def test_ivfpq_snapshot_warm_plan_starts_no_job(spark, emb, tmp_path):
+    """A loaded service's ivfpq batch search reads the saved code table's
+    schema once per snapshot version: after one warm list-query call,
+    building the plan of the next call starts no Spark job (the schema
+    read was a file-listing job on every call)."""
+    from neighborly_spark.search_service import SearchService
+
+    svc = SearchService(emb, dim=64)
+    svc.build_index("ivfpq")
+    svc.save(str(tmp_path / "snap"))
+    loaded = SearchService.load(spark, str(tmp_path / "snap"))
+    qs = [(i, list(r.embedding)) for i, r in enumerate(emb.limit(3).collect())]
+    first = sorted(tuple(r) for r in loaded.search_batch(qs, k=K, method="ivfpq").collect())
+    sc = spark.sparkContext
+    sc.setJobGroup("ivfpq-snap-plan", "")
+    again = loaded.search_batch(qs, k=K, method="ivfpq")
+    assert list(sc.statusTracker().getJobIdsForGroup("ivfpq-snap-plan")) == []
+    sc.setJobGroup("ivfpq-snap-plan-done", "")
+    assert sorted(tuple(r) for r in again.collect()) == first
+
+
 def test_ivfpq_snapshot_tag_filter_worker_resident(spark, emb, ivfpq_model, tmp_path):
     """Round 9 (r8 VERDICT 2): tag filters ride the ivfpq snapshot tier —
     the mask evaluates worker-side over artifact-embedded tags BEFORE ADC
